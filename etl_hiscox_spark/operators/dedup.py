@@ -1039,39 +1039,32 @@ def write_minhash_index(
     num_bands: int = 6,
     shingle_k: int = 3,
     mode: str = "overwrite",
-    generational: bool = True,
     txn: tuple[str, int] | None = None,
 ) -> None:
     """Persist the banded LSH bucket table as the near-dedup index.
 
-    Layout: ``path/buckets`` = (doc, band, bucket) parquet; ``path/meta``
-    = a 1-row parquet pinning (num_hashes, num_bands, shingle_k). Probes
-    read their banding parameters FROM the meta — a probe banded
-    differently from its index silently misses every duplicate, so the
-    parameters travel with the data, never with the caller.
-    ``mode="append"`` adds a new batch's buckets to an existing index
-    (parameters must already match — validated against meta).
+    Segment layout: ``<segment>/buckets`` = (doc, band, bucket) parquet;
+    ``<segment>/meta`` = a 1-row parquet pinning (num_hashes, num_bands,
+    shingle_k). Probes read their banding parameters FROM the meta — a
+    probe banded differently from its index silently misses every
+    duplicate, so the parameters travel with the data, never with the
+    caller. ``mode="append"`` adds a new batch's buckets to an existing
+    index (parameters must already match — validated against meta).
 
-    ``generational=True`` — the DEFAULT since r13 (VERDICT r12 item 3:
-    new indexes must be object-store-safe without the user knowing to
-    ask) — builds the GENERATION-POINTER layout (r12,
-    :mod:`sources/genlog`): the flat index above is staged as a complete
-    generation under ``<path>/gen-*/`` and an atomic ``_gen_log``
+    The index is GENERATIONAL (:mod:`sources/genlog`): a build stages one
+    complete segment under ``<path>/gen-*/`` and an atomic ``_gen_log``
     pointer commit makes it live; compact/erase/rebuild then commit new
-    generations with pointer flips instead of directory renames, so the
-    FULL maintenance lifecycle runs on any filesystem.
-    ``generational=False`` opts into the legacy FLAT layout (rename-
-    committed maintenance, driver-local only) — kept readable and
-    maintainable forever; :func:`migrate_flat_index_to_generational`
-    upgrades it in place. A root that is already generational stays
-    generational regardless of the flag.
+    generations with pointer flips, so the full maintenance lifecycle
+    runs on any filesystem. A legacy flat root (buckets/meta directly
+    under ``path``) stays probe-readable; maintenance on it fails loudly
+    until :func:`migrate_flat_index_to_generational` upgrades it.
 
-    OCC APPENDS (r13; closes the ADVICE r12 lost-append race): on a
-    generational root ``mode="append"`` stages the batch's buckets as a
-    self-contained DELTA segment (``gen-*`` with its own buckets + meta)
-    and commits it with a pointer flip whose ``segments`` list = the
-    head's segments plus the delta (:func:`genlog.append_segment`) — so
-    a compact/erase/rebuild staged from the pre-append snapshot now
+    OCC APPENDS (r13; closes the ADVICE r12 lost-append race):
+    ``mode="append"`` stages the batch's buckets as a self-contained
+    DELTA segment (``gen-*`` with its own buckets + meta) and commits it
+    with a pointer flip whose ``segments`` list = the head's segments
+    plus the delta (:func:`genlog.append_segment`) — so a
+    compact/erase/rebuild staged from the pre-append snapshot now
     COLLIDES on the version instead of silently dropping the appended
     rows, committed generations stay immutable (a concurrent maintenance
     read can never observe a half-written bucket file), and a lost
@@ -1079,15 +1072,12 @@ def write_minhash_index(
     it stays valid whoever won — unless the winner re-banded the index,
     which fails the parameter check loudly). Probes read the union of
     segments; the next compact merges them back to one — the LSM shape.
-    Flat roots keep the plain in-place parquet append.
 
-    ``txn=(app_id, batch_id)`` makes a generational append EXACTLY-ONCE
-    under streaming redelivery (:func:`genlog.append_segment`'s
-    watermark ledger — a foreachBatch replay at or below its app's
-    committed watermark is a no-op): the streaming ingest path passes
-    Structured Streaming's batch id here. REJECTED loudly on flat roots
-    (no commit record to carry a ledger — silently degrading to
-    at-least-once is the failure mode the tag exists to prevent).
+    ``txn=(app_id, batch_id)`` makes an append EXACTLY-ONCE under
+    streaming redelivery (:func:`genlog.append_segment`'s watermark
+    ledger — a foreachBatch replay at or below its app's committed
+    watermark is a no-op): the streaming ingest path passes Structured
+    Streaming's batch id here.
 
     At 100 TB: the index is |corpus| × num_bands fixed-width rows; the
     probe join shuffles on (band, bucket) 16-byte keys. Bucketing the
@@ -1097,27 +1087,13 @@ def write_minhash_index(
     from etl_hiscox_spark.sources import genlog
 
     spark = df.sparkSession
-    if num_hashes % num_bands != 0:
-        # same guard as minhash_candidates: trailing signature hashes
-        # would be computed but never banded — a silent recall loss the
-        # meta would then propagate to every probe
+    if txn is not None and mode != "append":
         raise ValueError(
-            f"num_hashes ({num_hashes}) must be divisible by num_bands "
-            f"({num_bands}) — trailing hashes would be computed but never banded"
+            "txn=(app_id, batch_id) requires mode='append' — the watermark "
+            f"ledger rides append commits (got mode={mode!r})"
         )
-    gen_layout = genlog.is_generational(spark, path)
-    if txn is not None and not (mode == "append" and gen_layout):
-        # fail-loud convention: silently dropping the exactly-once
-        # contract on a flat root (no commit record to carry the ledger)
-        # would let a crash-replayed micro-batch land twice with no signal
-        raise ValueError(
-            "txn=(app_id, batch_id) requires mode='append' on a GENERATIONAL "
-            f"index root (got mode={mode!r}, generational={gen_layout}) — the "
-            "watermark ledger lives in the pointer records; migrate the flat "
-            "index with migrate_flat_index_to_generational first"
-        )
-    if mode == "append" and gen_layout:
-        root = genlog.resolve_root(spark, path)
+    root = genlog.resolve_root(spark, path)
+    if mode == "append":
         requested = (num_hashes, num_bands, shingle_k)
 
         def _validate_banding(rec: dict) -> None:
@@ -1132,76 +1108,77 @@ def write_minhash_index(
         # validate against the CURRENT head before paying the staging
         # write, then again inside each commit attempt (a rebuild landing
         # mid-append changes the banding out from under the staged delta);
-        # current_generation is loud on an empty log (interrupted build)
+        # current_generation is loud on a legacy flat root (migrate first)
+        # and on an empty log (interrupted build)
         head_version, _ = genlog.current_generation(spark, root)
         head_rec = genlog.read_pointer(root, head_version)
         if genlog.is_replay(head_rec, txn):
             return  # replayed micro-batch: skip BEFORE staging anything
         _validate_banding(head_rec)
         delta = genlog.new_generation_name()
-        write_minhash_index(
+        _write_minhash_segment(
             df, text_col, id_col, genlog._join(root, delta),
-            num_hashes=num_hashes, num_bands=num_bands, shingle_k=shingle_k,
-            generational=False,
+            num_hashes, num_bands, shingle_k,
         )
         genlog.append_segment(
             spark, root, delta, validate=_validate_banding, txn=txn
         )
         return
-    if mode != "append" and (generational or gen_layout):
-        root = genlog.resolve_root(spark, path)
-        _reject_flat_index_debris(spark, root)
-        # capture the base pointer BEFORE staging: the commit lands at
-        # base+1 create-if-absent, so a build racing another commit on
-        # this root collides loudly instead of silently superseding it
-        base = genlog.latest_pointer_version(spark, root)
-        gen = genlog.new_generation_name()
-        # stage the complete flat index as a fresh generation (buckets
-        # first, meta last — the staged tree is valid only once finished),
-        # then the pointer commit makes it live atomically; a crash before
-        # the commit leaves the previous generation (or nothing, for a
-        # first build) live and the stage vacuum-reclaimable
-        write_minhash_index(
-            df, text_col, id_col, genlog._join(root, gen),
-            num_hashes=num_hashes, num_bands=num_bands, shingle_k=shingle_k, generational=False,
+    _reject_flat_index_debris(spark, root)
+    # capture the base pointer BEFORE staging: the commit lands at
+    # base+1 create-if-absent, so a build racing another commit on
+    # this root collides loudly instead of silently superseding it
+    base = genlog.latest_pointer_version(spark, root)
+    gen = genlog.new_generation_name()
+    # stage the complete segment as a fresh generation; the pointer
+    # commit makes it live atomically — a crash before the commit leaves
+    # the previous generation (or nothing, for a first build) live and
+    # the stage vacuum-reclaimable
+    _write_minhash_segment(
+        df, text_col, id_col, genlog._join(root, gen),
+        num_hashes, num_bands, shingle_k,
+    )
+    genlog.commit_generation(
+        spark, root, gen, "build", base_version=base,
+        geometry_id=genlog.new_geometry_id(),
+        # an overwrite-build onto an EXISTING head carries its
+        # exactly-once ledger like every other commit (review: a
+        # build that reset it would let a crash-replayed micro-batch
+        # land twice right after an index refresh)
+        txn_watermarks=(
+            genlog.read_pointer(root, base).get("txn_watermarks")
+            if base is not None
+            else None
+        ),
+    )
+
+
+def _write_minhash_segment(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    path: str,
+    num_hashes: int = 24,
+    num_bands: int = 6,
+    shingle_k: int = 3,
+) -> None:
+    """Write ONE complete index tree at ``path``: buckets first, meta
+    LAST — meta is the tree's commit record, so a crash in between leaves
+    a meta-less tree every probe rejects loudly. Callers stage into a
+    fresh ``gen-*`` directory and publish it with a pointer commit."""
+    if num_hashes % num_bands != 0:
+        # same guard as minhash_candidates: trailing signature hashes
+        # would be computed but never banded — a silent recall loss the
+        # meta would then propagate to every probe
+        raise ValueError(
+            f"num_hashes ({num_hashes}) must be divisible by num_bands "
+            f"({num_bands}) — trailing hashes would be computed but never banded"
         )
-        genlog.commit_generation(
-            spark, root, gen, "build", base_version=base,
-            geometry_id=genlog.new_geometry_id(),
-            # an overwrite-build onto an EXISTING head carries its
-            # exactly-once ledger like every other commit (review: a
-            # build that reset it would let a crash-replayed micro-batch
-            # land twice right after an index refresh)
-            txn_watermarks=(
-                genlog.read_pointer(root, base).get("txn_watermarks")
-                if base is not None
-                else None
-            ),
-        )
-        return
-    if mode == "append":
-        meta = _read_index_meta(spark, path)
-        if meta != (num_hashes, num_bands, shingle_k):
-            raise ValueError(
-                "minhash index parameter mismatch: index has "
-                f"{meta}, append asked for {(num_hashes, num_bands, shingle_k)}"
-            )
-    else:
-        # Commit protocol (ADVICE r8): meta is the index's commit record.
-        # Invalidate it BEFORE overwriting buckets and rewrite it only
-        # AFTER the bucket write succeeds — a failure in between leaves an
-        # index with buckets but no meta, and every probe then fails
-        # loudly in _read_index_meta instead of banding against a STALE
-        # meta and silently missing every duplicate (the drift the meta
-        # exists to prevent). Append mode needs no invalidation: the
-        # parameters were just validated equal, so a partial bucket append
-        # can lose rows but can never band a probe differently.
-        _invalidate_index_meta(spark, path)
     sig = minhash_signature_table(df, text_col, id_col, num_hashes, shingle_k)
-    _banded_buckets(sig, num_hashes, num_bands).write.mode(mode).parquet(
+    _banded_buckets(sig, num_hashes, num_bands).write.mode("overwrite").parquet(
         os.path.join(path, "buckets")
     )
-    _write_index_meta(spark, path, num_hashes, num_bands, shingle_k)
+    _write_index_meta(df.sparkSession, path, num_hashes, num_bands, shingle_k)
 
 
 _FLAT_INDEX_MARKERS = ("buckets", "meta", "_centroids")
@@ -1250,11 +1227,11 @@ def _reject_flat_index_debris(spark, root: str) -> None:
 def migrate_flat_index_to_generational(spark, path: str) -> str:
     """One-time in-place upgrade of a FLAT index root (either layout) to
     the generation-pointer layout: the flat tree's entries move into a
-    fresh ``gen-*`` directory (os.rename — driver-local only, like every
-    flat-layout maintenance op; remote flat indexes don't exist because
-    flat maintenance already refuses remote paths) and a v0 pointer
-    commits it. Every subsequent probe resolves the pointer and every
-    maintenance op commits by pointer flip. Returns the generation name.
+    fresh ``gen-*`` directory (os.rename — driver-local only; flat
+    maintenance always refused remote paths, so no remote flat index
+    exists) and a v0 pointer commits it. Every subsequent probe resolves
+    the pointer and every maintenance op commits by pointer flip — flat
+    roots are read-only until migrated. Returns the generation name.
 
     RE-RUNNABLE across every crash window (second review + ADVICE r12):
     a crash mid-rename or before the pointer commit leaves a root with
@@ -1308,62 +1285,22 @@ def migrate_flat_index_to_generational(spark, path: str) -> str:
 
 
 def _require_local_index_path(spark, path: str, op: str) -> str:
-    """Maintenance ops (compact/erase/rebuild) swap files with
-    os.rename/shutil — driver-local filesystems only. An index on s3a://
-    or a non-file defaultFS would fail with an opaque OSError AFTER the
-    Spark tmp write already ran, leaking the tmp dir (ADVICE r10); fail
+    """The flat-to-generational migration moves the legacy tree with
+    os.rename — driver-local filesystems only. An index on s3a:// or a
+    non-file defaultFS would fail with an opaque OSError mid-move; fail
     loudly up front instead, and hand back the ``file://``-stripped local
     path for the os-level steps (Spark-facing calls keep the original)."""
     if not _meta_is_local(spark, path):
         raise ValueError(
-            f"{op}: driver-local index paths only — the FLAT index layout "
-            f"commits maintenance with os.rename, which cannot reach "
-            f"{path!r}. On a cluster filesystem build the index with "
-            "generational=True (sources/genlog): its maintenance commits "
-            "by atomic pointer flip and runs anywhere."
+            f"{op}: driver-local index paths only — a legacy FLAT index is "
+            f"migrated with os.rename, which cannot reach {path!r}. Rebuild "
+            "the index at a fully-qualified URI instead: every build is "
+            "generational and its maintenance commits by atomic pointer "
+            "flip on any filesystem."
         )
     from etl_hiscox_spark.sources.writers import _local_fs_path
 
     return _local_fs_path(path)
-
-
-def begin_staged_rebuild(spark, path: str, op: str) -> str:
-    """First half of the staged-rebuild commit protocol shared by
-    :func:`rebuild_minhash_index` and ``similarity.rebuild_ivf_index``
-    (ONE implementation — the repo's swap_and_refresh rule: hand-rolled
-    copies of a multi-step swap drift apart on exactly the step a crash
-    needs). Validates there are no ``__rebuild``/``__old`` leftovers from
-    an interrupted run and returns the STAGING uri (``<path>__rebuild``)
-    for the caller to write the complete new index into; commit with
-    :func:`commit_staged_rebuild`."""
-    local = _require_local_index_path(spark, path, op)
-    for leftover in (local.rstrip("/") + "__rebuild", local.rstrip("/") + "__old"):
-        if os.path.exists(leftover):
-            raise ValueError(
-                f"{op}: leftover {leftover!r} from an interrupted rebuild "
-                "— run recover_staged_rebuild(spark, path) first (it "
-                "completes or rolls back the interrupted swap and "
-                "validates the live index)."
-            )
-    return path.rstrip("/") + "__rebuild"
-
-
-def commit_staged_rebuild(spark, path: str, op: str) -> None:
-    """Second half: two atomic renames (live → ``__old``, staged → live),
-    remove ``__old`` last, refresh Spark's path caches. Every crash
-    window leaves either the untouched live index or two complete
-    indexes with the live name absent — never a half-valid index under
-    the live name."""
-    import shutil
-
-    local = _require_local_index_path(spark, path, op)
-    lold = local.rstrip("/") + "__old"
-    os.rename(local, lold)
-    os.rename(local.rstrip("/") + "__rebuild", local)
-    shutil.rmtree(lold)
-    from etl_hiscox_spark.sources.writers import refresh_swapped_path
-
-    refresh_swapped_path(spark, path)
 
 
 def _validate_live_index(spark, path: str) -> str:
@@ -1385,178 +1322,51 @@ def _validate_live_index(spark, path: str) -> str:
     )
 
 
-def recover_staged_rebuild(spark, path: str) -> str:
-    """Complete or roll back an INTERRUPTED staged rebuild (VERDICT r11
-    item 4 — the recovery that was previously a docstring instruction to
-    a human). Inspects the ``<path>`` / ``<path>__rebuild`` /
-    ``<path>__old`` triple, applies the one action each crash window
-    admits, validates the resulting live index (layout-detected: IVF
-    centroids or minhash meta must load), refreshes Spark's path caches,
-    and returns the action taken:
-
-    - live only → ``"none"`` (nothing was interrupted).
-    - live + ``__rebuild`` → crash during/after staging, before the
-      commit's first rename: the live index was never touched, so ROLL
-      BACK — remove the stage (``"rolled_back_stage"``). The staged tree
-      may be incomplete (its commit record is written last), so
-      completing from it would be guessing; re-run the rebuild instead.
-    - ``__old`` + ``__rebuild``, live absent → crash between the two
-      renames: the stage is COMPLETE by protocol (staging finished
-      before the first rename ran), so COMPLETE the swap — rename the
-      stage to live, drop ``__old`` (``"completed_swap"``).
-    - live + ``__old`` → crash after the second rename, before ``__old``
-      cleanup: the swap landed; drop ``__old`` (``"removed_old"``).
-    - ``__old`` only, live absent → the stage vanished outside the
-      protocol; restore the pre-rebuild index — rename ``__old`` back to
-      live (``"restored_old"``).
-    - anything else (no index at all; live + BOTH leftovers) is
-      unreachable under the protocol → raise, touch nothing.
-
-    Idempotent: every terminal state maps to ``"none"`` on a re-run, so
-    crash-during-recovery is recovered by recovering again.
-    """
-    import shutil
-
-    local = _require_local_index_path(spark, path, "recover_staged_rebuild")
-    live, stage, old = (
-        local.rstrip("/"),
-        local.rstrip("/") + "__rebuild",
-        local.rstrip("/") + "__old",
-    )
-    has = {p: os.path.exists(p) for p in (live, stage, old)}
-    if has[live] and has[stage] and has[old]:
-        raise ValueError(
-            f"recover_staged_rebuild: {path!r} has live, __rebuild AND "
-            "__old — unreachable under the staged-rebuild protocol; "
-            "refusing to guess (inspect by hand)"
-        )
-    if has[live] and not has[stage] and not has[old]:
-        action = "none"
-    elif has[live] and has[stage]:
-        shutil.rmtree(stage)
-        action = "rolled_back_stage"
-    elif has[live] and has[old]:
-        shutil.rmtree(old)
-        action = "removed_old"
-    elif has[stage] and has[old]:
-        os.rename(stage, live)
-        shutil.rmtree(old)
-        action = "completed_swap"
-    elif has[old]:
-        os.rename(old, live)
-        action = "restored_old"
-    elif has[stage]:
-        # stage only, no live, no __old: begin_staged_rebuild requires a
-        # live index and the commit moves it to __old before anything
-        # else — this state cannot arise from the protocol
-        raise ValueError(
-            f"recover_staged_rebuild: {path!r} has ONLY a __rebuild stage "
-            "— unreachable under the staged-rebuild protocol (the live "
-            "index moves to __old before the stage is promoted); refusing "
-            "to promote an unverifiable stage"
-        )
-    else:
-        raise ValueError(
-            f"recover_staged_rebuild: nothing to recover at {path!r} — no "
-            "live index, no __rebuild, no __old (was the index ever built?)"
-        )
-    _validate_live_index(spark, path)
-    from etl_hiscox_spark.sources.writers import refresh_swapped_path
-
-    refresh_swapped_path(spark, path)
-    return action
-
-
-def _rename_meta_aside(spark, path: str, aside_name: str) -> None:
-    """Recoverable invalidation for MAINTENANCE ops whose meta is
-    unchanged: rename ``<path>/meta`` to ``<path>/<aside_name>`` instead
-    of deleting it (ADVICE r10 — a crash between a delete-style
-    invalidation and the final meta rewrite would permanently lose the
-    banding parameters even though the bucket data is intact). Mirrors
-    the IVF erase ``_centroids__erase`` protocol: after a crash the
-    parameters are still on disk under the aside name, and a successful
-    op restores the exact original bytes. Overwrite-style builds (whose
-    meta legitimately changes) keep delete-style invalidation."""
-    local = _require_local_index_path(spark, path, "_rename_meta_aside")
-    aside = os.path.join(local, aside_name)
-    if os.path.exists(aside):
-        raise ValueError(
-            f"minhash index at {path!r} has a leftover {aside_name!r} from "
-            "an interrupted maintenance run — recover first (rename it "
-            "back to 'meta' if the bucket table is intact, or rebuild)."
-        )
-    os.rename(os.path.join(local, "meta"), aside)
-
-
-def _restore_meta_from_aside(spark, path: str, aside_name: str) -> None:
-    local = _require_local_index_path(spark, path, "_restore_meta_from_aside")
-    os.rename(os.path.join(local, aside_name), os.path.join(local, "meta"))
-
-
 def compact_minhash_index(spark, path: str, target_file_mb: int = 256) -> int:
     """Rewrite a minhash index's bucket table into ~target-sized files.
 
-    ``write_minhash_index(mode="append")`` adds one file set per batch —
-    at daily-ingest cadence the bucket table fragments into thousands of
-    small files and every probe's (band, bucket) join pays an open/LIST
-    tax (VERDICT r9). Compaction rewrites ``<path>/buckets`` range-
-    partitioned AND sorted on (band, bucket) — beyond defragmenting, the
-    layout now clusters each probe key into one file-contiguous run.
+    ``write_minhash_index(mode="append")`` adds one delta segment per
+    batch — at daily-ingest cadence the index fragments into many small
+    files and every probe's (band, bucket) join pays an open/LIST tax
+    (VERDICT r9). Compaction merges every live segment into ONE bucket
+    table range-partitioned AND sorted on (band, bucket) — beyond
+    defragmenting, the layout now clusters each probe key into one
+    file-contiguous run.
 
     Bucket CONTENT is untouched, so probe results are equal by
     construction (pinned by test and by the l2_lsh_compact_probe oracle).
-    The rewrite runs under the index's own commit protocol: meta is
-    renamed ASIDE first (``meta__compact`` — recoverable, never deleted:
-    the parameters are unchanged by compaction, so a crash must not lose
-    the only copy; ADVICE r10) and renamed back only after the bucket
-    rewrite lands — an interrupted compaction leaves a meta-less index
-    every probe rejects loudly, never a half-rewritten bucket table read
-    silently. Returns the post-compaction bucket file count.
+    The compacted table stages as a COMPLETE new generation (buckets
+    first, meta last) and a pointer flip commits it; the pre-compaction
+    generation stays live through every crash window and readable until
+    :func:`genlog.vacuum_generations`. Returns the post-compaction bucket
+    file count.
     """
     from etl_hiscox_spark.sources import genlog
-    from etl_hiscox_spark.sources.writers import (
-        compact_parquet_to_dir,
-        compact_small_files,
-    )
+    from etl_hiscox_spark.sources.writers import compact_parquet_to_dir
 
-    if genlog.is_generational(spark, path):
-        # object-store form (r12): the compacted bucket table is staged
-        # as a COMPLETE new generation (buckets first, meta last) and a
-        # pointer flip commits it — no rename touches any data dir, so
-        # this runs on any filesystem; the pre-compaction generation
-        # stays live through every crash window and readable until
-        # genlog.vacuum_generations
-        base, _live_gen = genlog.current_generation(spark, path)
-        rec = genlog.read_pointer(genlog.resolve_root(spark, path), base)
-        segs = [genlog._join(path, s) for s in genlog.pointer_segments(rec)]
-        params = _read_index_meta(spark, segs[0], resolved=True)
-        gen = genlog.new_generation_name()
-        target = genlog._join(path, gen)
-        # multi-segment heads (OCC append deltas, r13) merge back to ONE
-        # segment here — compaction doubles as the LSM segment merge
-        n = compact_parquet_to_dir(
-            spark,
-            [os.path.join(s, "buckets") for s in segs],
-            genlog._join(target, "buckets"),
-            target_file_mb,
-            sort_by=("band", "bucket"),
-        )
-        _write_index_meta(spark, target, *params)
-        # base captured at resolve time: a concurrent commit since then
-        # (e.g. an erase) collides loudly instead of being undone
-        genlog.commit_generation(
-            spark, path, gen, "compact", base_version=base,
-            geometry_id=rec.get("geometry_id"),
-            txn_watermarks=rec.get("txn_watermarks"),
-        )
-        return n
-    _require_local_index_path(spark, path, "compact_minhash_index")
-    _read_index_meta(spark, path)  # loud on an uncommitted index
-    _rename_meta_aside(spark, path, "meta__compact")
-    n = compact_small_files(
-        spark, os.path.join(path, "buckets"), target_file_mb, sort_by=("band", "bucket")
+    base, _live_gen = genlog.current_generation(spark, path)
+    rec = genlog.read_pointer(genlog.resolve_root(spark, path), base)
+    segs = [genlog._join(path, s) for s in genlog.pointer_segments(rec)]
+    params = _read_index_meta(spark, segs[0], resolved=True)
+    gen = genlog.new_generation_name()
+    target = genlog._join(path, gen)
+    # multi-segment heads (OCC append deltas, r13) merge back to ONE
+    # segment here — compaction doubles as the LSM segment merge
+    n = compact_parquet_to_dir(
+        spark,
+        [os.path.join(s, "buckets") for s in segs],
+        genlog._join(target, "buckets"),
+        target_file_mb,
+        sort_by=("band", "bucket"),
     )
-    _restore_meta_from_aside(spark, path, "meta__compact")
+    _write_index_meta(spark, target, *params)
+    # base captured at resolve time: a concurrent commit since then
+    # (e.g. an erase) collides loudly instead of being undone
+    genlog.commit_generation(
+        spark, path, gen, "compact", base_version=base,
+        geometry_id=rec.get("geometry_id"),
+        txn_watermarks=rec.get("txn_watermarks"),
+    )
     return n
 
 
@@ -1568,157 +1378,132 @@ def erase_from_minhash_index(spark, path: str, keys: DataFrame, id_col: str) -> 
     The index retains a banded fingerprint of every ingested document —
     GDPR reaches it exactly like the primary table
     (``sources/writers.erase_keys``), and an erased doc must stop
-    surfacing as ``dup_of`` in every future probe. The rewrite runs
-    under the index's commit protocol (meta renamed aside to
-    ``meta__erase`` first — recoverable, the parameters are unchanged by
-    erasure; ADVICE r10 — and renamed back after the bucket swap) so an
-    interrupted erasure leaves a loudly-rejected index with its
-    parameters still on disk, never a half-erased one read
-    silently. Whole-bucket-table rewrite (tmp + swap) — the honest
-    fallback at this layout; at 100 TB partition the bucket table by
-    ``band`` (or bucket prefix) so erasure rewrites only affected
-    partitions, the same upgrade path erase_keys documents.
+    surfacing as ``dup_of`` in every future probe. Kept rows stage as a
+    complete new generation (buckets, then the unchanged meta as the
+    commit record) and a pointer flip makes them live, so an interrupted
+    erasure leaves the pre-erase head live and the stage
+    vacuum-reclaimable, never a half-erased index read silently. Only
+    segments holding erased docs are rewritten; at 100 TB partition the
+    bucket table by ``band`` (or bucket prefix) so erasure rewrites only
+    affected partitions, the same upgrade path erase_keys documents.
     """
     from etl_hiscox_spark.sources import genlog
 
-    if genlog.is_generational(spark, path):
-        # object-store form (r12): kept rows are staged as a complete new
-        # generation (buckets, then the unchanged meta as the commit
-        # record) and a pointer flip makes them live — no data-dir rename
-        base, _live_gen = genlog.current_generation(spark, path)
-        root = genlog.resolve_root(spark, path)
-        rec = genlog.read_pointer(root, base)
-        seg_names = genlog.pointer_segments(rec)
-        params = _read_index_meta(
-            spark, genlog._join(root, seg_names[0]), resolved=True
+    base, _live_gen = genlog.current_generation(spark, path)
+    root = genlog.resolve_root(spark, path)
+    rec = genlog.read_pointer(root, base)
+    seg_names = genlog.pointer_segments(rec)
+    params = _read_index_meta(
+        spark, genlog._join(root, seg_names[0]), resolved=True
+    )
+    # SELECTIVE segment rewrite (r13, the LSM payoff): an erased doc
+    # must vanish from the build segment AND every delta, but a
+    # segment with NO hits is kept in the new pointer BY REFERENCE —
+    # erase IO is proportional to the segments actually touched, not
+    # the index (an erase of recent subjects rewrites only the recent
+    # deltas). All rewrites stage first; ONE pointer commit publishes.
+    k = F.broadcast(keys.select(F.col(id_col).alias("doc")).distinct())
+    # ONE stats action across every segment instead of a sequential
+    # semi-join count per segment (r17, guide §2.6/§5: per-action
+    # latency dominated multi-segment heads; committed generations
+    # are immutable, so stats and rewrites read consistent bytes)
+    from etl_hiscox_spark.operators.similarity import _segment_hit_stats
+
+    # resolve the bucket schema ONCE — a pyarrow footer read when the
+    # store is local, else one Spark inference on the first segment —
+    # and reuse it for every segment (r18, guide §6): every segment is
+    # written by _banded_buckets with identical layout (appends
+    # validate banding against the geometry segment), and per-call
+    # footer inference profiled ~80-230 ms per spark.read.parquet; a
+    # mismatched segment still fails loudly at scan time, never
+    # silently casts
+    from etl_hiscox_spark.fastschema import fast_parquet_schema
+
+    seg_dfs: list[DataFrame] = []
+    seg_schema = fast_parquet_schema(
+        os.path.join(genlog._join(root, seg_names[0]), "buckets")
+    )
+    for name in seg_names:
+        reader = (
+            spark.read.schema(seg_schema) if seg_schema is not None else spark.read
         )
-        # SELECTIVE segment rewrite (r13, the LSM payoff): an erased doc
-        # must vanish from the build segment AND every delta, but a
-        # segment with NO hits is kept in the new pointer BY REFERENCE —
-        # erase IO is proportional to the segments actually touched, not
-        # the index (an erase of recent subjects rewrites only the recent
-        # deltas). All rewrites stage first; ONE pointer commit publishes.
-        k = F.broadcast(keys.select(F.col(id_col).alias("doc")).distinct())
-        # ONE stats action across every segment instead of a sequential
-        # semi-join count per segment (r17, guide §2.6/§5: per-action
-        # latency dominated multi-segment heads; committed generations
-        # are immutable, so stats and rewrites read consistent bytes)
-        from etl_hiscox_spark.operators.similarity import _segment_hit_stats
+        seg = reader.parquet(os.path.join(genlog._join(root, name), "buckets"))
+        seg_schema = seg_schema or seg.schema
+        seg_dfs.append(seg)
+    if len(seg_dfs) == 1:
+        # FUSED stats+rewrite for the single-segment head (the common
+        # shape after a compact — r18, guide §5): the anti-join
+        # rewrite job itself reports total/kept via observe(), so the
+        # erase pays ONE action instead of stats-then-rewrite (the
+        # repair lifecycle profiled 3 erases × ~0.4 s stats + ~0.3 s
+        # rewrite back to back). A no-hit erase abandons the staged
+        # bucket dir (meta never written — exactly the
+        # crash-before-meta state every probe already rejects and
+        # vacuum reclaims) and returns 0 with no commit, matching the
+        # stats-first path's contract.
+        from pyspark.sql import Observation
 
-        # resolve the bucket schema ONCE — a pyarrow footer read when the
-        # store is local, else one Spark inference on the first segment —
-        # and reuse it for every segment (r18, guide §6): every segment is
-        # written by _banded_buckets with identical layout (appends
-        # validate banding against the geometry segment), and per-call
-        # footer inference profiled ~80-230 ms per spark.read.parquet; a
-        # mismatched segment still fails loudly at scan time, never
-        # silently casts
-        from etl_hiscox_spark.fastschema import fast_parquet_schema
-
-        seg_dfs: list[DataFrame] = []
-        seg_schema = fast_parquet_schema(
-            os.path.join(genlog._join(root, seg_names[0]), "buckets")
+        o_tot, o_kept = Observation(), Observation()
+        gen = genlog.new_generation_name()
+        target = genlog._join(root, gen)
+        kept = (
+            seg_dfs[0]
+            .observe(o_tot, F.count(F.lit(1)).alias("n"))
+            .join(k, "doc", "left_anti")
+            .observe(o_kept, F.count(F.lit(1)).alias("n"))
         )
-        for name in seg_names:
-            reader = (
-                spark.read.schema(seg_schema) if seg_schema is not None else spark.read
-            )
-            seg = reader.parquet(os.path.join(genlog._join(root, name), "buckets"))
-            seg_schema = seg_schema or seg.schema
-            seg_dfs.append(seg)
-        if len(seg_dfs) == 1:
-            # FUSED stats+rewrite for the single-segment head (the common
-            # shape after a compact — r18, guide §5): the anti-join
-            # rewrite job itself reports total/kept via observe(), so the
-            # erase pays ONE action instead of stats-then-rewrite (the
-            # repair lifecycle profiled 3 erases × ~0.4 s stats + ~0.3 s
-            # rewrite back to back). A no-hit erase abandons the staged
-            # bucket dir (meta never written — exactly the
-            # crash-before-meta state every probe already rejects and
-            # vacuum reclaims) and returns 0 with no commit, matching the
-            # stats-first path's contract.
-            from pyspark.sql import Observation
-
-            o_tot, o_kept = Observation(), Observation()
-            gen = genlog.new_generation_name()
-            target = genlog._join(root, gen)
-            kept = (
-                seg_dfs[0]
-                .observe(o_tot, F.count(F.lit(1)).alias("n"))
-                .join(k, "doc", "left_anti")
-                .observe(o_kept, F.count(F.lit(1)).alias("n"))
-            )
-            kept.write.mode("error").parquet(genlog._join(target, "buckets"))
-            n_erased = (o_tot.get["n"] or 0) - (o_kept.get["n"] or 0)
-            if n_erased == 0:
-                try:  # tidy the no-hit stage now; vacuum reclaims on failure
-                    fs_, p_ = genlog._fs(target)
-                    fs_.delete_dir(p_)
-                except (FileNotFoundError, OSError):
-                    pass
-                return 0
-            _write_index_meta(spark, target, *params)
-            genlog.commit_generation(
-                spark, path, gen, "erase", base_version=base,
-                segments=[gen],
-                geometry_id=rec.get("geometry_id"),
-                txn_watermarks=rec.get("txn_watermarks"),
-            )
-            return n_erased
-        stats = _segment_hit_stats(seg_dfs, k, "doc")
-        n_erased = sum(h for _t, h in stats)
+        kept.write.mode("error").parquet(genlog._join(target, "buckets"))
+        n_erased = (o_tot.get["n"] or 0) - (o_kept.get["n"] or 0)
         if n_erased == 0:
+            try:  # tidy the no-hit stage now; vacuum reclaims on failure
+                fs_, p_ = genlog._fs(target)
+                fs_.delete_dir(p_)
+            except (FileNotFoundError, OSError):
+                pass
             return 0
-        new_segments: list[str] = []
-        first_rewritten: str | None = None
-        rewrites: list[tuple[str, DataFrame]] = []
-        for name, buckets, (_total, hits) in zip(seg_names, seg_dfs, stats):
-            if hits == 0:
-                new_segments.append(name)
-                continue
-            # a fully-erased rewrite stays READABLE (Spark writes the
-            # schema file for an empty non-partitioned frame), so the
-            # segment keeps its slot — dropping it could demote a delta
-            # into the geometry position
-            gen = genlog.new_generation_name()
-            rewrites.append((gen, buckets.join(k, "doc", "left_anti")))
-            new_segments.append(gen)
-            first_rewritten = first_rewritten or gen
-        # hit segments rewrite to DISJOINT staged trees — independent
-        # writes, overlapped (guide §2.6); ONE pointer commit publishes
-        from etl_hiscox_spark.concurrency import run_overlapped
-
-        def _rewrite(gen: str, kept: DataFrame) -> None:
-            target = genlog._join(root, gen)
-            kept.write.mode("error").parquet(genlog._join(target, "buckets"))
-            _write_index_meta(spark, target, *params)
-
-        run_overlapped([lambda g=g, kd=kd: _rewrite(g, kd) for g, kd in rewrites])
+        _write_index_meta(spark, target, *params)
         genlog.commit_generation(
-            spark, path, first_rewritten, "erase", base_version=base,
-            segments=new_segments,
+            spark, path, gen, "erase", base_version=base,
+            segments=[gen],
             geometry_id=rec.get("geometry_id"),
             txn_watermarks=rec.get("txn_watermarks"),
         )
         return n_erased
-    _require_local_index_path(spark, path, "erase_from_minhash_index")
-    _read_index_meta(spark, path)  # loud on an uncommitted index
-    buckets_path = os.path.join(path, "buckets")
-    buckets = spark.read.parquet(buckets_path)
-    k = F.broadcast(keys.select(F.col(id_col).alias("doc")).distinct())
-    n_erased = buckets.join(k, "doc", "left_semi").count()
+    stats = _segment_hit_stats(seg_dfs, k, "doc")
+    n_erased = sum(h for _t, h in stats)
     if n_erased == 0:
         return 0
-    kept = buckets.join(k, "doc", "left_anti")
-    tmp = buckets_path.rstrip("/") + "__erase"
-    kept.write.mode("overwrite").parquet(tmp)
-    # invalidate only once the replacement bucket table is fully staged —
-    # the uncommitted window is just the swap + rename-back
-    _rename_meta_aside(spark, path, "meta__erase")
-    from etl_hiscox_spark.sources.writers import swap_and_refresh
+    new_segments: list[str] = []
+    first_rewritten: str | None = None
+    rewrites: list[tuple[str, DataFrame]] = []
+    for name, buckets, (_total, hits) in zip(seg_names, seg_dfs, stats):
+        if hits == 0:
+            new_segments.append(name)
+            continue
+        # a fully-erased rewrite stays READABLE (Spark writes the
+        # schema file for an empty non-partitioned frame), so the
+        # segment keeps its slot — dropping it could demote a delta
+        # into the geometry position
+        gen = genlog.new_generation_name()
+        rewrites.append((gen, buckets.join(k, "doc", "left_anti")))
+        new_segments.append(gen)
+        first_rewritten = first_rewritten or gen
+    # hit segments rewrite to DISJOINT staged trees — independent
+    # writes, overlapped (guide §2.6); ONE pointer commit publishes
+    from etl_hiscox_spark.concurrency import run_overlapped
 
-    swap_and_refresh(spark, tmp, buckets_path)
-    _restore_meta_from_aside(spark, path, "meta__erase")
+    def _rewrite(gen: str, kept: DataFrame) -> None:
+        target = genlog._join(root, gen)
+        kept.write.mode("error").parquet(genlog._join(target, "buckets"))
+        _write_index_meta(spark, target, *params)
+
+    run_overlapped([lambda g=g, kd=kd: _rewrite(g, kd) for g, kd in rewrites])
+    genlog.commit_generation(
+        spark, path, first_rewritten, "erase", base_version=base,
+        segments=new_segments,
+        geometry_id=rec.get("geometry_id"),
+        txn_watermarks=rec.get("txn_watermarks"),
+    )
     return n_erased
 
 
@@ -1785,66 +1570,41 @@ def rebuild_minhash_index(
     the source corpus, so the caller supplies ``df``; the rebuilt index
     indexes EXACTLY those rows. That also makes this the
     fingerprint-refresh op: pass the current base table (post-erasures)
-    and the index drops any stragglers in the same swap. ``None``
+    and the index drops any stragglers in the same commit. ``None``
     parameters keep the live meta's values.
 
-    Commit protocol (rename-aside, mirroring ``rebuild_ivf_index``): the
-    COMPLETE new index is staged at ``<path>__rebuild`` (buckets first,
-    meta LAST — the staged tree is a valid index only once finished),
-    then two atomic renames: live → ``<path>__old``, staged → live;
-    ``__old`` is removed last. Every crash window leaves either the
-    untouched live index or two complete indexes with the live name
-    absent (probes fail loudly on the missing path;
-    :func:`recover_staged_rebuild` completes or rolls back the swap).
-    Driver-local paths only, like the other maintenance ops. Returns the
-    new (num_hashes, num_bands, shingle_k).
+    Commit protocol: the COMPLETE re-banded index stages as a fresh
+    generation (buckets first, meta LAST) and ONE atomic pointer flip
+    makes it live. Every crash window before the flip leaves the old
+    generation live and the stage vacuum-reclaimable; an append racing
+    the flip re-validates its banding inside its own commit and fails
+    loudly instead of landing stale. Returns the new (num_hashes,
+    num_bands, shingle_k).
     """
     from etl_hiscox_spark.sources import genlog
 
-    if genlog.is_generational(spark, path):
-        # object-store form (r12): the re-banded index stages as a fresh
-        # generation and the pointer flip IS the two-rename swap — one
-        # atomic commit instead of two renames, same crash guarantees
-        base, _live_gen = genlog.current_generation(spark, path)
-        rec = genlog.read_pointer(genlog.resolve_root(spark, path), base)
-        cur_hashes, cur_bands, cur_k = _read_index_meta(
-            spark,
-            genlog._join(path, genlog.pointer_segments(rec)[0]),
-            resolved=True,
-        )
-        new = (
-            int(num_hashes) if num_hashes is not None else cur_hashes,
-            int(num_bands) if num_bands is not None else cur_bands,
-            int(shingle_k) if shingle_k is not None else cur_k,
-        )
-        root = genlog.resolve_root(spark, path)
-        gen = genlog.new_generation_name()
-        write_minhash_index(
-            df, text_col, id_col, genlog._join(root, gen),
-            num_hashes=new[0], num_bands=new[1], shingle_k=new[2], generational=False,
-        )
-        genlog.commit_generation(
-            spark, root, gen, "rebuild", base_version=base,
-            geometry_id=genlog.new_geometry_id(),
-            txn_watermarks=rec.get("txn_watermarks"),
-        )
-        return new
-    tmp = begin_staged_rebuild(spark, path, "rebuild_minhash_index")
-    cur_hashes, cur_bands, cur_k = _read_index_meta(spark, path)  # loud on uncommitted
+    base, _live_gen = genlog.current_generation(spark, path)
+    rec = genlog.read_pointer(genlog.resolve_root(spark, path), base)
+    cur_hashes, cur_bands, cur_k = _read_index_meta(
+        spark,
+        genlog._join(path, genlog.pointer_segments(rec)[0]),
+        resolved=True,
+    )
     new = (
         int(num_hashes) if num_hashes is not None else cur_hashes,
         int(num_bands) if num_bands is not None else cur_bands,
         int(shingle_k) if shingle_k is not None else cur_k,
     )
-    # write_minhash_index stages the complete new index (divisibility
-    # guard included; buckets first, meta last) — on a FRESH tmp path its
-    # meta invalidation is a no-op, so the staging inherits the build
-    # path's own commit ordering
-    write_minhash_index(
-        df, text_col, id_col, tmp,
-        num_hashes=new[0], num_bands=new[1], shingle_k=new[2], generational=False,
+    root = genlog.resolve_root(spark, path)
+    gen = genlog.new_generation_name()
+    _write_minhash_segment(
+        df, text_col, id_col, genlog._join(root, gen), *new
     )
-    commit_staged_rebuild(spark, path, "rebuild_minhash_index")
+    genlog.commit_generation(
+        spark, root, gen, "rebuild", base_version=base,
+        geometry_id=genlog.new_geometry_id(),
+        txn_watermarks=rec.get("txn_watermarks"),
+    )
     return new
 
 
@@ -1905,25 +1665,6 @@ def _write_index_meta(spark, path: str, num_hashes: int, num_bands: int, shingle
         [(num_hashes, num_bands, shingle_k)],
         "num_hashes int, num_bands int, shingle_k int",
     ).write.mode("overwrite").parquet(meta_path)
-
-
-def _invalidate_index_meta(spark, path: str) -> None:
-    """Remove the index meta — the 'uncommitted' state of the overwrite
-    protocol in :func:`write_minhash_index`. Local paths via shutil;
-    remote via the Hadoop FileSystem API (recursive delete)."""
-    meta_path = os.path.join(path, "meta")
-    if _meta_is_local(spark, path):
-        import shutil
-
-        from etl_hiscox_spark.sources.writers import _local_fs_path
-
-        shutil.rmtree(_local_fs_path(meta_path), ignore_errors=True)
-        return
-    sc = spark.sparkContext
-    jpath = sc._jvm.org.apache.hadoop.fs.Path(meta_path)
-    fs = jpath.getFileSystem(sc._jsc.hadoopConfiguration())
-    if fs.exists(jpath):
-        fs.delete(jpath, True)
 
 
 def _read_index_meta(spark, path: str, resolved: bool = False) -> tuple[int, int, int]:

@@ -456,8 +456,6 @@ def write_ivf_index(
     max_iter: int | None = None,
     centroids: np.ndarray | None = None,
     quantize: bool = False,
-    generational: bool = True,
-    _staged: bool = False,
 ) -> np.ndarray:
     """Materialize the IVF index as a cluster-partitioned parquet table;
     returns the centroid matrix and ALSO persists it inside the index
@@ -466,11 +464,15 @@ def write_ivf_index(
     FROM the index, never from the caller — the same params-travel-with-
     the-data rule as the minhash index meta.
 
-    Commit protocol for free: the partitioned overwrite clears ``path``
-    (including any previous ``_centroids``) and the centroids are written
-    LAST — a failure in between leaves an index without centroids, which
-    :func:`load_ivf_centroids` rejects loudly instead of probing with
-    stale geometry.
+    The index is GENERATIONAL (:mod:`sources/genlog`): the build stages
+    one complete segment under ``<path>/gen-*/`` — partitions first, the
+    ``_centroids`` commit record LAST — and an atomic ``_gen_log``
+    pointer commit makes it live; compact/erase/rebuild then flip
+    pointers, so the full maintenance lifecycle runs on any filesystem.
+    A crash before the commit leaves the previous head (or nothing)
+    live and the stage vacuum-reclaimable. A legacy flat root stays
+    probe-readable; maintenance on it fails loudly until
+    ``dedup.migrate_flat_index_to_generational`` upgrades it.
 
     ``centroids`` pins EXPLICIT geometry instead of fitting k-means — the
     rebuild-preserving-geometry path (re-materialize a fragmented or
@@ -495,50 +497,53 @@ def write_ivf_index(
     detects ``__codes`` in the index schema and quantizes the batch with
     the same expression); compaction/erase/rebuild carry the columns
     through as ordinary payload.
-
-    ``generational=True`` — the DEFAULT since r13 (VERDICT r12 item 3:
-    new indexes must be object-store-safe without the user knowing to
-    ask) — builds the GENERATION-POINTER layout (r12,
-    :mod:`sources/genlog`): the index stages as a complete generation
-    under ``<path>/gen-*/`` and an atomic ``_gen_log`` pointer commit
-    makes it live — compact/erase/rebuild then flip pointers instead of
-    renaming data dirs, so the full maintenance lifecycle runs on any
-    filesystem. ``generational=False`` opts into the legacy FLAT layout
-    (rename-committed maintenance, driver-local only) — kept readable
-    and maintainable forever;
-    ``dedup.migrate_flat_index_to_generational`` upgrades it in place.
-    A root that is already generational stays generational regardless
-    of the flag.
     """
     from etl_hiscox_spark.operators.dedup import _reject_flat_index_debris
     from etl_hiscox_spark.sources import genlog
 
     spark = df.sparkSession
-    if generational or genlog.is_generational(spark, path):
-        root = genlog.resolve_root(spark, path)
-        _reject_flat_index_debris(spark, root)
-        # base captured BEFORE staging: the commit lands at base+1
-        # create-if-absent, so racing commits collide loudly (r12 review)
-        base = genlog.latest_pointer_version(spark, root)
-        gen = genlog.new_generation_name()
-        C = write_ivf_index(
-            df, genlog._join(root, gen), embedding_col, id_col,
-            n_clusters=n_clusters, seed=seed, train_fraction=train_fraction,
-            max_iter=max_iter, centroids=centroids, quantize=quantize,
-            generational=False, _staged=True,
-        )
-        genlog.commit_generation(
-            spark, root, gen, "build", base_version=base,
-            geometry_id=genlog.new_geometry_id(),
-            # an overwrite-build onto an EXISTING head carries its
-            # exactly-once ledger like every other commit (review)
-            txn_watermarks=(
-                genlog.read_pointer(root, base).get("txn_watermarks")
-                if base is not None
-                else None
-            ),
-        )
-        return C
+    root = genlog.resolve_root(spark, path)
+    _reject_flat_index_debris(spark, root)
+    # base captured BEFORE staging: the commit lands at base+1
+    # create-if-absent, so racing commits collide loudly (r12 review)
+    base = genlog.latest_pointer_version(spark, root)
+    gen = genlog.new_generation_name()
+    C = _write_ivf_segment(
+        df, genlog._join(root, gen), embedding_col, id_col,
+        n_clusters=n_clusters, seed=seed, train_fraction=train_fraction,
+        max_iter=max_iter, centroids=centroids, quantize=quantize,
+    )
+    genlog.commit_generation(
+        spark, root, gen, "build", base_version=base,
+        geometry_id=genlog.new_geometry_id(),
+        # an overwrite-build onto an EXISTING head carries its
+        # exactly-once ledger like every other commit (review)
+        txn_watermarks=(
+            genlog.read_pointer(root, base).get("txn_watermarks")
+            if base is not None
+            else None
+        ),
+    )
+    return C
+
+
+def _write_ivf_segment(
+    df: DataFrame,
+    path: str,
+    embedding_col: str,
+    id_col: str,
+    n_clusters: int = 16,
+    seed: int = 42,
+    train_fraction: float = 1.0,
+    max_iter: int | None = None,
+    centroids: np.ndarray | None = None,
+    quantize: bool = False,
+) -> np.ndarray:
+    """Write ONE complete IVF tree at ``path`` — cluster partitions
+    first, the ``_centroids`` commit record LAST — and return the
+    centroid matrix. Callers stage into a fresh ``gen-*`` directory and
+    publish it with a pointer commit."""
+    spark = df.sparkSession
 
     def _with_codes(assigned: DataFrame) -> DataFrame:
         if not quantize:
@@ -553,42 +558,22 @@ def write_ivf_index(
         assigned = _with_codes(
             df.withColumn("__cluster", _nearest_centroid_col(C, F.col(embedding_col)))
         )
-        if _staged:
-            # staged tree (generational build): the malformed gate rides
-            # the write itself via observe() — one action instead of
-            # count-then-write (r17, guide §5). Raising AFTER the write
-            # but BEFORE _write_ivf_centroids leaves a centroid-less
-            # staged tree no reader trusts and vacuum reclaims — the
-            # exact crash-mid-stage state the protocol already covers.
-            _write_observed_gate(assigned, path, "write_ivf_index", C)
-        else:
-            # flat root: the overwrite clears the LIVE index, so the gate
-            # must fire before any byte lands — bad input leaves the old
-            # index intact (the pre-r17 contract, kept)
-            assigned = assigned.persist()
-            try:
-                bad = assigned.filter(F.col("__cluster") < 0).count()
-                if bad:
-                    raise ValueError(
-                        f"write_ivf_index: {bad} embedding(s) are NULL, empty, NaN, "
-                        f"or not {C.shape[1]}-dimensional — repair or drop them "
-                        "before indexing (a written -1 partition would be "
-                        "invisible to every probe)"
-                    )
-                _write_ivf_partitions(assigned, path)
-            finally:
-                assigned.unpersist(blocking=False)
-        _write_ivf_centroids(df.sparkSession, path, C, quantized=quantize)
-        return C
-    assigned, centroids = ivf_index(
-        df, embedding_col, id_col, n_clusters, seed, train_fraction, max_iter
-    )
-    _write_ivf_partitions(_with_codes(assigned), path)
-    _write_ivf_centroids(df.sparkSession, path, centroids, quantized=quantize)
-    return centroids
+        # the malformed gate rides the write itself via observe() — one
+        # action instead of count-then-write (r17, guide §5). Raising
+        # AFTER the write but BEFORE _write_ivf_centroids leaves a
+        # centroid-less staged tree no reader trusts and vacuum reclaims
+        # — the exact crash-mid-stage state the protocol already covers.
+        _write_observed_gate(assigned, path, "write_ivf_index", C)
+    else:
+        assigned, C = ivf_index(
+            df, embedding_col, id_col, n_clusters, seed, train_fraction, max_iter
+        )
+        _write_ivf_partitions(_with_codes(assigned), path)
+    _write_ivf_centroids(spark, path, C, quantized=quantize)
+    return C
 
 
-def _write_ivf_partitions(assigned: DataFrame, path: str, mode: str = "overwrite") -> None:
+def _write_ivf_partitions(assigned: DataFrame, path: str) -> None:
     # Cluster-wise pre-shuffle before the partitioned write: without it
     # every write task holds rows of every cluster and emits one file per
     # (task, cluster) — shuffle_partitions × n_clusters KB-scale files on
@@ -598,14 +583,13 @@ def _write_ivf_partitions(assigned: DataFrame, path: str, mode: str = "overwrite
     # exchange of the assigned frame; at 100 TB clusters larger than a
     # healthy task add a size salt (compact_ivf_index's mechanism).
     #
-    # The commit protocol REQUIRES the overwrite to clear the whole path
-    # (stale cluster partitions and the previous _centroids must not
-    # survive a rebuild). Under the session config
+    # A written tree must hold exactly the assigned rows (no stale
+    # cluster partition may survive in it). Under the session config
     # spark.sql.sources.partitionOverwriteMode=dynamic an overwrite only
     # replaces partitions present in the new data — so pin static mode on
     # THIS writer; the safety invariant must not depend on session config
     # (ADVICE r9).
-    assigned.repartition("__cluster").write.partitionBy("__cluster").mode(mode).option(
+    assigned.repartition("__cluster").write.partitionBy("__cluster").mode("overwrite").option(
         "partitionOverwriteMode", "static"
     ).parquet(path)
 
@@ -621,9 +605,9 @@ def _write_ivf_centroids(
     # needs "does this layout store __codes?" in O(1), and a full-index
     # schema inference per daily append is exactly the listing tax the
     # fragmentation stats were moved off the driver to avoid. _centroids
-    # survives every maintenance op by construction (compact copies it
-    # byte-for-byte, erase renames it aside and back, rebuild rewrites
-    # it), so the flag can never drift from the layout.
+    # survives every maintenance op by construction (compact and erase
+    # rewrite it unchanged, rebuild rewrites it with the same flag), so
+    # the flag can never drift from the layout.
     from etl_hiscox_spark.operators.dedup import _meta_is_local
 
     cdir = os.path.join(path, "_centroids")
@@ -812,26 +796,6 @@ def _write_observed_gate(
         )
 
 
-def _reject_malformed_assignments(assigned: DataFrame, C: np.ndarray) -> None:
-    """ONE copy of the append-side malformed-row gate (review: the delta
-    and in-place branches each carried it verbatim — a fix to one would
-    silently leave the other behind). Reject LOUDLY before anything lands
-    on disk (r9 review): assign() marks NULL / wrong-dim / NaN embeddings
-    as -1, and writing them would create a ``__cluster=-1`` partition no
-    probe ever reads — stored-but-unsearchable forever, silently. The
-    build path fails on the same input (KMeansModel.transform throws on
-    null vectors); appends must be symmetric. Callers persist ``assigned``
-    first so this check and the write are one computation."""
-    bad = assigned.filter(F.col("__cluster") < 0).count()
-    if bad:
-        raise ValueError(
-            f"append_to_ivf_index: {bad} embedding(s) are NULL, empty, "
-            f"NaN, or not {C.shape[1]}-dimensional — repair or drop them "
-            "before appending (a written -1 partition would be invisible "
-            "to every probe)"
-        )
-
-
 def _stage_ivf_delta(
     df: DataFrame, target: str, geom_seg: str, embedding_col: str
 ) -> None:
@@ -874,8 +838,8 @@ def append_to_ivf_index(
     re-clustering (centroid drift repair) is an explicit rebuild, not a
     side effect.
 
-    OCC APPENDS (r13; closes the ADVICE r12 lost-append race): on a
-    generational root the batch stages as a self-contained DELTA segment
+    OCC APPENDS (r13; closes the ADVICE r12 lost-append race): the
+    batch stages as a self-contained DELTA segment
     (its ``__cluster=`` partitions plus a validated copy of the geometry
     record) and commits with a pointer flip whose ``segments`` list = the
     head's segments plus the delta (:func:`genlog.append_segment`) — a
@@ -887,77 +851,47 @@ def append_to_ivf_index(
     geometry epoch, so the delta's cluster assignments are stale — that
     raises :class:`genlog.GeometryChanged` and the append re-stages
     against the new centroids (bounded attempts). Probes read the union
-    of segments; the next compact merges them — the LSM shape. Flat
-    roots keep the plain in-place partition append.
+    of segments; the next compact merges them — the LSM shape. A legacy
+    flat root fails loudly with the migration hint.
 
-    ``txn=(app_id, batch_id)`` makes a generational append EXACTLY-ONCE
-    under streaming redelivery (:func:`genlog.append_segment`'s watermark
-    ledger); REJECTED loudly on flat roots — they have no commit record
-    to carry the ledger, and silently degrading to at-least-once is the
-    failure mode the tag exists to prevent.
+    ``txn=(app_id, batch_id)`` makes an append EXACTLY-ONCE under
+    streaming redelivery (:func:`genlog.append_segment`'s watermark
+    ledger).
     """
     from etl_hiscox_spark.sources import genlog
 
     spark = df.sparkSession
-    if not genlog.is_generational(spark, path):
-        if txn is not None:
-            # fail-loud convention: silently dropping the exactly-once
-            # contract on a flat root would let a crash-replayed
-            # micro-batch land twice with no signal
-            raise ValueError(
-                "txn=(app_id, batch_id) requires a GENERATIONAL index root "
-                "— the watermark ledger lives in the pointer records; "
-                "migrate the flat index with "
-                "migrate_flat_index_to_generational first"
-            )
-    else:
-        root = genlog.resolve_root(spark, path)
-        for _ in range(3):
-            version, _gen = genlog.current_generation(spark, root)
-            rec = genlog.read_pointer(root, version)
-            if genlog.is_replay(rec, txn):
-                return  # replayed micro-batch: skip BEFORE staging
-            geom_seg = genlog._join(root, genlog.pointer_segments(rec)[0])
-            geometry_id = rec.get("geometry_id")
+    root = genlog.resolve_root(spark, path)
+    for _ in range(3):
+        version, _gen = genlog.current_generation(spark, root)
+        rec = genlog.read_pointer(root, version)
+        if genlog.is_replay(rec, txn):
+            return  # replayed micro-batch: skip BEFORE staging
+        geom_seg = genlog._join(root, genlog.pointer_segments(rec)[0])
+        geometry_id = rec.get("geometry_id")
 
-            def _same_geometry(head_rec: dict, pinned=geometry_id) -> None:
-                if head_rec.get("geometry_id") != pinned:
-                    raise genlog.GeometryChanged(
-                        "IVF geometry changed mid-append (a rebuild "
-                        "committed) — the staged delta's cluster "
-                        "assignments are stale; re-staging"
-                    )
-
-            delta = genlog.new_generation_name()
-            _stage_ivf_delta(df, genlog._join(root, delta), geom_seg,
-                             embedding_col)
-            try:
-                genlog.append_segment(
-                    spark, root, delta, validate=_same_geometry, txn=txn
+        def _same_geometry(head_rec: dict, pinned=geometry_id) -> None:
+            if head_rec.get("geometry_id") != pinned:
+                raise genlog.GeometryChanged(
+                    "IVF geometry changed mid-append (a rebuild "
+                    "committed) — the staged delta's cluster "
+                    "assignments are stale; re-staging"
                 )
-                return
-            except genlog.GeometryChanged:
-                continue  # stale delta is vacuum-reclaimable debris
-        raise RuntimeError(
-            "append_to_ivf_index: geometry changed on every attempt (3) — "
-            "pathological rebuild contention; pause rebuilds and re-append"
-        )
-    # flat layout: in-place partition append (driver-local maintenance).
-    # quantized layouts propagate — the flag comes from the _centroids
-    # commit record in O(1), a full index schema inference per daily
-    # append would pay the very listing tax this module keeps off the
-    # driver (r11 review).
-    C = load_ivf_centroids(spark, path, resolved=True)
-    assigned = _assign_to_centroids(
-        df, C, ivf_index_is_quantized(spark, path, resolved=True), embedding_col
-    ).persist()
-    try:
-        _reject_malformed_assignments(assigned, C)
-        # same cluster-wise pre-shuffle as the build write: one file per
-        # TOUCHED partition per batch instead of one per (task, cluster)
-        _write_ivf_partitions(assigned, path, mode="append")
-    finally:
-        assigned.unpersist(blocking=False)
+
+        delta = genlog.new_generation_name()
+        _stage_ivf_delta(df, genlog._join(root, delta), geom_seg,
+                         embedding_col)
+        try:
+            genlog.append_segment(
+                spark, root, delta, validate=_same_geometry, txn=txn
+            )
+            return
+        except genlog.GeometryChanged:
+            continue  # stale delta is vacuum-reclaimable debris
+    raise RuntimeError(
+        "append_to_ivf_index: geometry changed on every attempt (3) — "
+        "pathological rebuild contention; pause rebuilds and re-append"
+    )
 
 
 def compact_ivf_index(spark, path: str, target_file_mb: int = 256) -> int:
@@ -976,135 +910,77 @@ def compact_ivf_index(spark, path: str, target_file_mb: int = 256) -> int:
 
     Per-cluster file counts come from the actual on-disk bytes; rows are
     salted ``hash(payload) % n_files[cluster]`` so each output file is a
-    deterministic subset. Write-to-tmp + swap, same recipe as
-    ``compact_small_files`` (the plan lazily reads ``path``; an in-place
-    overwrite would delete its own input mid-job). Local-filesystem swap
-    here; on a cluster the identical rewrite is table-format ``OPTIMIZE``.
+    deterministic subset. Every live segment (build + append deltas)
+    merges into ONE new generation — partitions first, centroids last —
+    and a pointer flip commits it; no rename touches any data dir.
+    Sizing facts come from distributed_dir_stats (the fragmentation-stats
+    machinery), so the driver's share stays bounded by n_clusters.
     Returns the post-compaction data file count.
     """
-    import shutil
+    from pyarrow import fs as pafs
 
-    from etl_hiscox_spark.operators.dedup import _require_local_index_path
     from etl_hiscox_spark.sources import genlog
 
-    if genlog.is_generational(spark, path):
-        # object-store form (r12): the compacted partitions stage as a
-        # COMPLETE new generation (partitions first, centroids last) and
-        # a pointer flip commits — no rename touches any data dir. Sizing
-        # facts come from distributed_dir_stats (the fragmentation-stats
-        # machinery), so the driver's share stays bounded by n_clusters.
-        from pyarrow import fs as pafs
+    from etl_hiscox_spark.sources.listing import (
+        _dir_file_stats,
+        _resolve_fs,
+        distributed_dir_stats,
+    )
 
-        from etl_hiscox_spark.sources.listing import (
-            _dir_file_stats,
-            _resolve_fs,
-            distributed_dir_stats,
-        )
-
-        base, _live_gen = genlog.current_generation(spark, path)
-        rec = genlog.read_pointer(genlog.resolve_root(spark, path), base)
-        segs = [genlog._join(path, s) for s in genlog.pointer_segments(rec)]
-        C = load_ivf_centroids(spark, segs[0], resolved=True)
-        quantized = ivf_index_is_quantized(spark, segs[0], resolved=True)
-        # sizing facts across EVERY live segment (OCC append deltas, r13):
-        # the same cluster may hold files in several segments — sum them;
-        # the merged output is one segment, the LSM compaction shape
-        dirs = []
-        for seg in segs:
-            filesystem, seg_path = _resolve_fs(seg)
-            for info in filesystem.get_file_info(
-                pafs.FileSelector(seg_path, recursive=False)
+    base, _live_gen = genlog.current_generation(spark, path)
+    rec = genlog.read_pointer(genlog.resolve_root(spark, path), base)
+    segs = [genlog._join(path, s) for s in genlog.pointer_segments(rec)]
+    C = load_ivf_centroids(spark, segs[0], resolved=True)
+    quantized = ivf_index_is_quantized(spark, segs[0], resolved=True)
+    # sizing facts across EVERY live segment (OCC append deltas, r13):
+    # the same cluster may hold files in several segments — sum them;
+    # the merged output is one segment, the LSM compaction shape
+    dirs = []
+    for seg in segs:
+        filesystem, seg_path = _resolve_fs(seg)
+        for info in filesystem.get_file_info(
+            pafs.FileSelector(seg_path, recursive=False)
+        ):
+            if info.type == pafs.FileType.Directory and info.base_name.startswith(
+                "__cluster="
             ):
-                if info.type == pafs.FileType.Directory and info.base_name.startswith(
-                    "__cluster="
-                ):
-                    dirs.append((int(info.base_name.split("=", 1)[1]), genlog._join(seg, info.base_name)))
-        if not dirs:
-            # FULLY-ERASED head (the readable-empty contract, fc6a9d5):
-            # the zero-row placeholder generation has a geometry record —
-            # proven by load_ivf_centroids above — but no __cluster=
-            # partitions, and scheduled compaction landing on it must be
-            # a no-op, not an error (ADVICE r13: erase-everything then
-            # compact errored until an append or rebuild arrived)
-            return 0
-        sizes: dict[int, int] = {}
-        for r in distributed_dir_stats(spark, dirs).collect():
-            sizes[int(r["key"])] = sizes.get(int(r["key"]), 0) + int(r["total_bytes"])
-        step = target_file_mb * 1024 * 1024
-        n_files = {c: max(1, -(-b // step)) for c, b in sizes.items()}
-        df = _read_ivf_segments(spark, segs)
-        data_cols = [c for c in df.columns if c != "__cluster"]
-        n_map = F.create_map(*[F.lit(x) for item in n_files.items() for x in item])
-        salt = F.pmod(F.hash(*[F.col(c) for c in data_cols]), n_map[F.col("__cluster")])
-        gen = genlog.new_generation_name()
-        target = genlog._join(path, gen)
-        (
-            df.repartition(sum(n_files.values()), F.col("__cluster"), salt)
-            .write.partitionBy("__cluster")
-            .mode("error")
-            .option("partitionOverwriteMode", "static")
-            .parquet(target)
-        )
-        n_out = _dir_file_stats(target)[0]  # before centroids land
-        _write_ivf_centroids(spark, target, C, quantized=quantized)
-        # base captured at resolve time: a concurrent commit since then
-        # (e.g. an erase) collides loudly instead of being undone
-        genlog.commit_generation(
-            spark, path, gen, "compact", base_version=base,
-            geometry_id=rec.get("geometry_id"),
-            txn_watermarks=rec.get("txn_watermarks"),
-        )
-        return n_out
-    # driver-local paths only (ADVICE r10): the swap below is os.rename —
-    # fail loudly BEFORE the Spark tmp write, never leak a __compact dir
-    local = _require_local_index_path(spark, path, "compact_ivf_index")
-    # validate the commit record first — compacting an interrupted index
-    # must fail loudly, not re-materialize a centroid-less layout
-    load_ivf_centroids(spark, path)
-    sizes: dict[int, int] = {}
-    for entry in os.listdir(local):
-        if not entry.startswith("__cluster="):
-            continue
-        cdir = os.path.join(local, entry)
-        sizes[int(entry.split("=", 1)[1])] = sum(
-            os.path.getsize(os.path.join(root, f))
-            for root, _, files in os.walk(cdir)
-            for f in files
-            if f.endswith(".parquet")
-        )
-    if not sizes:
-        # fully-erased flat index: geometry record present (validated
-        # above), zero partitions — same no-op contract as the
-        # generational branch (ADVICE r13)
+                dirs.append((int(info.base_name.split("=", 1)[1]), genlog._join(seg, info.base_name)))
+    if not dirs:
+        # FULLY-ERASED head (the readable-empty contract, fc6a9d5):
+        # the zero-row placeholder generation has a geometry record —
+        # proven by load_ivf_centroids above — but no __cluster=
+        # partitions, and scheduled compaction landing on it must be
+        # a no-op, not an error (ADVICE r13: erase-everything then
+        # compact errored until an append or rebuild arrived)
         return 0
+    sizes: dict[int, int] = {}
+    for r in distributed_dir_stats(spark, dirs).collect():
+        sizes[int(r["key"])] = sizes.get(int(r["key"]), 0) + int(r["total_bytes"])
     step = target_file_mb * 1024 * 1024
     n_files = {c: max(1, -(-b // step)) for c, b in sizes.items()}
-    df = spark.read.parquet(path)
+    df = _read_ivf_segments(spark, segs)
     data_cols = [c for c in df.columns if c != "__cluster"]
     n_map = F.create_map(*[F.lit(x) for item in n_files.items() for x in item])
-    # pmod already returns a non-negative result for negative hashes; an
-    # abs() here would overflow loudly under ANSI mode (Spark 4 default)
-    # on the one-in-2^32 row whose int32 hash is Integer.MIN_VALUE
     salt = F.pmod(F.hash(*[F.col(c) for c in data_cols]), n_map[F.col("__cluster")])
-    tmp = path.rstrip("/") + "__compact"
-    ltmp = local.rstrip("/") + "__compact"
+    gen = genlog.new_generation_name()
+    target = genlog._join(path, gen)
     (
         df.repartition(sum(n_files.values()), F.col("__cluster"), salt)
         .write.partitionBy("__cluster")
-        .mode("overwrite")
+        .mode("error")
         .option("partitionOverwriteMode", "static")
-        .parquet(tmp)
+        .parquet(target)
     )
-    shutil.copytree(os.path.join(local, "_centroids"), os.path.join(ltmp, "_centroids"))
-    from etl_hiscox_spark.sources.writers import swap_and_refresh
-
-    swap_and_refresh(spark, tmp, path)
-    return sum(
-        1
-        for root, _, files in os.walk(local)
-        for f in files
-        if f.endswith(".parquet") and os.sep + "_centroids" not in root
+    n_out = _dir_file_stats(target)[0]  # before centroids land
+    _write_ivf_centroids(spark, target, C, quantized=quantized)
+    # base captured at resolve time: a concurrent commit since then
+    # (e.g. an erase) collides loudly instead of being undone
+    genlog.commit_generation(
+        spark, path, gen, "compact", base_version=base,
+        geometry_id=rec.get("geometry_id"),
+        txn_watermarks=rec.get("txn_watermarks"),
     )
+    return n_out
 
 
 def erase_from_ivf_index(spark, path: str, keys: DataFrame, id_col: str) -> int:
@@ -1114,136 +990,106 @@ def erase_from_ivf_index(spark, path: str, keys: DataFrame, id_col: str) -> int:
 
     Table-level erasure (``sources/writers.erase_keys``) leaves index
     layouts retaining the erased payload — an index IS a copy of the
-    data, so GDPR reaches it too. Erasure here touches ONLY the affected
-    cluster partitions: the erase set semi-joins the index to find its
-    clusters (a collect bounded by n_clusters ints), the kept rows of
-    those partitions are staged to a tmp dir (the lazy plan reads
-    ``path``, so an in-place overwrite would delete its own input), and
-    each affected partition directory is swapped. Centroid geometry and
-    every unaffected partition are untouched byte-for-byte — erasure is
-    maintenance, it must never drift the index contract. A cluster whose
-    rows are ALL erased simply loses its directory (an empty partition,
-    which every probe handles). ``keys`` broadcasts (erasure requests
+    data, so GDPR reaches it too. Kept rows stage as a complete new
+    generation (partitions first, the unchanged ``_centroids`` commit
+    record last) and a pointer flip commits, so an interrupted erasure
+    leaves the pre-erase head live and the stage vacuum-reclaimable —
+    never a half-erased index read silently. Centroid geometry is never
+    drifted (erasure is maintenance). Only segments holding erased ids
+    are rewritten; within a segment the rewrite covers the whole tree —
+    partial-generation reuse needs file-level manifests (the
+    Iceberg/Delta upgrade), so batch erasure requests to let each flip
+    amortize like an OPTIMIZE. ``keys`` broadcasts (erasure requests
     are tiny next to the index).
-
-    Commit protocol: ``_centroids`` is the index's commit record
-    (:func:`load_ivf_centroids` rejects an index without it) — it is
-    RENAMED ASIDE (atomic, byte-preserving) before the first partition
-    swap and renamed back only after the last one lands, so a crash
-    mid-loop leaves a loudly-rejected index, never a silently
-    half-erased one (or one missing a cluster's kept rows — a vanished
-    directory is indistinguishable from a legitimately fully-erased
-    cluster). Rename, not delete: the geometry stays recoverable on disk
-    (``_centroids__erase``) after a crash, and the centroid bytes are
-    untouched by a successful erasure.
     """
-    import shutil
-
-    from etl_hiscox_spark.operators.dedup import _require_local_index_path
     from etl_hiscox_spark.sources import genlog
 
-    if genlog.is_generational(spark, path):
-        # object-store form (r12): the kept rows stage as a complete new
-        # generation (partitions first, unchanged centroids last) and a
-        # pointer flip commits. This rewrites the WHOLE index — the
-        # pointer names one directory, so partial-generation reuse needs
-        # file-level manifests (the Iceberg/Delta upgrade); batch erasure
-        # requests so each flip amortizes like an OPTIMIZE. The flat
-        # local layout below keeps the affected-partitions-only rewrite.
-        base, _live_gen = genlog.current_generation(spark, path)
-        root = genlog.resolve_root(spark, path)
-        rec = genlog.read_pointer(root, base)
-        seg_names = genlog.pointer_segments(rec)
-        geom_seg = genlog._join(root, seg_names[0])
-        C = load_ivf_centroids(spark, geom_seg, resolved=True)
-        quantized = ivf_index_is_quantized(spark, geom_seg, resolved=True)
-        # SELECTIVE segment rewrite (r13, the LSM payoff): an erased id
-        # must vanish from the build segment AND every delta, but a
-        # segment with NO hits is kept in the new pointer BY REFERENCE —
-        # erase IO is proportional to the segments actually touched. A
-        # rewrite whose kept set is EMPTY is dropped from the list (an
-        # empty partitionBy write produces no readable files); if that
-        # empties the whole list, one schema-preserving merged generation
-        # is written so the geometry record survives (pre-r13 behavior
-        # for a fully-erased index).
-        k = F.broadcast(keys.select(F.col(id_col)).distinct())
-        # ONE stats action for every segment instead of a sequential
-        # hits-count (+ kept-empty check) per segment (r17, guide §2.6 /
-        # §5: the per-action latency dominated multi-segment erases —
-        # committed generations are immutable, so the stats and the
-        # rewrites below read consistent bytes by construction)
-        # first segment infers the schema, the rest reuse it (r18, guide
-        # §6: per-call footer inference profiled ~80-230 ms; all live
-        # segments share the layout by protocol — deltas carry a validated
-        # copy of the geometry record — and a mismatch fails loudly at
-        # scan time, never silently casts)
-        seg_dfs = [spark.read.parquet(genlog._join(root, seg_names[0]))]
-        schema = seg_dfs[0].schema
-        seg_dfs += [
-            spark.read.schema(schema).parquet(genlog._join(root, name))
-            for name in seg_names[1:]
-        ]
-        if len(seg_dfs) == 1:
-            # FUSED stats+rewrite for the single-segment head (r18, guide
-            # §5 — mirrors the minhash erase): the anti-join rewrite job
-            # reports total/kept via observe(), so the common erase pays
-            # one action instead of stats-then-rewrite. A no-hit erase
-            # abandons the staged tree (no centroid record written — the
-            # crash-mid-stage state the protocol already rejects and
-            # vacuum reclaims) and returns 0 with no commit; a fully-
-            # erased segment falls through to the readable-empty branch
-            # below exactly as the stats-first path does.
-            from pyspark.sql import Observation
+    base, _live_gen = genlog.current_generation(spark, path)
+    root = genlog.resolve_root(spark, path)
+    rec = genlog.read_pointer(root, base)
+    seg_names = genlog.pointer_segments(rec)
+    geom_seg = genlog._join(root, seg_names[0])
+    C = load_ivf_centroids(spark, geom_seg, resolved=True)
+    quantized = ivf_index_is_quantized(spark, geom_seg, resolved=True)
+    # SELECTIVE segment rewrite (r13, the LSM payoff): an erased id
+    # must vanish from the build segment AND every delta, but a
+    # segment with NO hits is kept in the new pointer BY REFERENCE —
+    # erase IO is proportional to the segments actually touched. A
+    # rewrite whose kept set is EMPTY is dropped from the list (an
+    # empty partitionBy write produces no readable files); if that
+    # empties the whole list, one schema-preserving merged generation
+    # is written so the geometry record survives (pre-r13 behavior
+    # for a fully-erased index).
+    k = F.broadcast(keys.select(F.col(id_col)).distinct())
+    # ONE stats action for every segment instead of a sequential
+    # hits-count (+ kept-empty check) per segment (r17, guide §2.6 /
+    # §5: the per-action latency dominated multi-segment erases —
+    # committed generations are immutable, so the stats and the
+    # rewrites below read consistent bytes by construction)
+    # first segment infers the schema, the rest reuse it (r18, guide
+    # §6: per-call footer inference profiled ~80-230 ms; all live
+    # segments share the layout by protocol — deltas carry a validated
+    # copy of the geometry record — and a mismatch fails loudly at
+    # scan time, never silently casts)
+    seg_dfs = [spark.read.parquet(genlog._join(root, seg_names[0]))]
+    schema = seg_dfs[0].schema
+    seg_dfs += [
+        spark.read.schema(schema).parquet(genlog._join(root, name))
+        for name in seg_names[1:]
+    ]
+    if len(seg_dfs) == 1:
+        # FUSED stats+rewrite for the single-segment head (r18, guide
+        # §5 — mirrors the minhash erase): the anti-join rewrite job
+        # reports total/kept via observe(), so the common erase pays
+        # one action instead of stats-then-rewrite. A no-hit erase
+        # abandons the staged tree (no centroid record written — the
+        # crash-mid-stage state the protocol already rejects and
+        # vacuum reclaims) and returns 0 with no commit; a fully-
+        # erased segment falls through to the readable-empty branch
+        # below exactly as the stats-first path does.
+        from pyspark.sql import Observation
 
-            o_tot, o_kept = Observation(), Observation()
+        o_tot, o_kept = Observation(), Observation()
+        gen = genlog.new_generation_name()
+        target = genlog._join(root, gen)
+        kept_df = (
+            seg_dfs[0]
+            .observe(o_tot, F.count(F.lit(1)).alias("n"))
+            .join(k, id_col, "left_anti")
+            .observe(o_kept, F.count(F.lit(1)).alias("n"))
+        )
+        _write_ivf_partitions(kept_df, target)
+        try:
+            total = o_tot.get["n"] or 0
+            n_kept = o_kept.get["n"] or 0
+        except Exception:
+            # a partitionBy write of ZERO rows plans zero tasks, so
+            # the CollectMetrics row never materializes and the
+            # metric fetch throws (pinned by the fully-erased tests)
+            # — every segment row was erased (or the segment was
+            # empty); one bounded count resolves which
+            total = seg_dfs[0].count()
+            n_kept = 0
+        n_erased = total - n_kept
+        if n_erased == 0 or n_kept == 0:
+            # no hits (stage useless) OR fully erased (a partitionBy
+            # write of an empty frame leaves no readable files) —
+            # drop the stage either way
+            try:
+                fs_, p_ = genlog._fs(target)
+                fs_.delete_dir(p_)
+            except (FileNotFoundError, OSError):
+                pass
+            if n_erased == 0:
+                return 0
+            # fully-erased index: write the READABLE zero-row
+            # dataset + geometry record (same as the stats-first
+            # path's empty-list branch)
             gen = genlog.new_generation_name()
             target = genlog._join(root, gen)
-            kept_df = (
-                seg_dfs[0]
-                .observe(o_tot, F.count(F.lit(1)).alias("n"))
-                .join(k, id_col, "left_anti")
-                .observe(o_kept, F.count(F.lit(1)).alias("n"))
-            )
-            _write_ivf_partitions(kept_df, target)
-            try:
-                total = o_tot.get["n"] or 0
-                n_kept = o_kept.get["n"] or 0
-            except Exception:
-                # a partitionBy write of ZERO rows plans zero tasks, so
-                # the CollectMetrics row never materializes and the
-                # metric fetch throws (pinned by the fully-erased tests)
-                # — every segment row was erased (or the segment was
-                # empty); one bounded count resolves which
-                total = seg_dfs[0].count()
-                n_kept = 0
-            n_erased = total - n_kept
-            if n_erased == 0 or n_kept == 0:
-                # no hits (stage useless) OR fully erased (a partitionBy
-                # write of an empty frame leaves no readable files) —
-                # drop the stage either way
-                try:
-                    fs_, p_ = genlog._fs(target)
-                    fs_.delete_dir(p_)
-                except (FileNotFoundError, OSError):
-                    pass
-                if n_erased == 0:
-                    return 0
-                # fully-erased index: write the READABLE zero-row
-                # dataset + geometry record (same as the stats-first
-                # path's empty-list branch)
-                gen = genlog.new_generation_name()
-                target = genlog._join(root, gen)
-                local_rows_df(spark, [], seg_dfs[0].schema).write.mode(
-                    "error"
-                ).parquet(target)
-                _write_ivf_centroids(spark, target, C, quantized=quantized)
-                genlog.commit_generation(
-                    spark, path, gen, "erase", base_version=base,
-                    segments=[gen],
-                    geometry_id=rec.get("geometry_id"),
-                    txn_watermarks=rec.get("txn_watermarks"),
-                )
-                return n_erased
+            local_rows_df(spark, [], seg_dfs[0].schema).write.mode(
+                "error"
+            ).parquet(target)
             _write_ivf_centroids(spark, target, C, quantized=quantized)
             genlog.commit_generation(
                 spark, path, gen, "erase", base_version=base,
@@ -1252,98 +1098,68 @@ def erase_from_ivf_index(spark, path: str, keys: DataFrame, id_col: str) -> int:
                 txn_watermarks=rec.get("txn_watermarks"),
             )
             return n_erased
-        stats = _segment_hit_stats(seg_dfs, k, id_col)
-        n_erased = sum(h for _t, h in stats)
-        if n_erased == 0:
-            return 0
-        new_segments = []
-        first_rewritten: str | None = None
-        rewrites: list[tuple[str, "DataFrame"]] = []
-        for name, seg, (total, hits) in zip(seg_names, seg_dfs, stats):
-            if hits == 0:
-                new_segments.append(name)
-                continue
-            if total == hits:
-                continue  # fully-erased segment: drops out of the list
-            gen = genlog.new_generation_name()
-            rewrites.append((gen, seg.join(k, id_col, "left_anti")))
-            new_segments.append(gen)
-            first_rewritten = first_rewritten or gen
-        # hit segments rewrite to DISJOINT staged trees — independent
-        # writes, overlapped from a small pool (guide §2.6); the single
-        # pointer commit below is what publishes them, in order
-        run_overlapped(
-            [
-                (
-                    lambda g=gen, kd=kept_df: (
-                        _write_ivf_partitions(kd, genlog._join(root, g)),
-                        _write_ivf_centroids(
-                            spark, genlog._join(root, g), C, quantized=quantized
-                        ),
-                    )
-                )
-                for gen, kept_df in rewrites
-            ]
-        )
-        if not new_segments:
-            # fully-erased index: a centroids-only tree is UNREADABLE
-            # (review — probes/erases crash on schema inference and the
-            # index is unrecoverable without a rebuild). Write a READABLE
-            # zero-row dataset carrying the full schema (__cluster rides
-            # as a plain column; Spark writes the schema file for an
-            # empty NON-partitioned frame) plus the geometry record —
-            # probes answer empty, appends stage deltas beside it, the
-            # next compact drops it.
-            gen = genlog.new_generation_name()
-            target = genlog._join(root, gen)
-            local_rows_df(spark, [], schema).write.mode("error").parquet(target)
-            _write_ivf_centroids(spark, target, C, quantized=quantized)
-            new_segments, first_rewritten = [gen], gen
+        _write_ivf_centroids(spark, target, C, quantized=quantized)
         genlog.commit_generation(
-            spark, path, first_rewritten or new_segments[0], "erase",
-            base_version=base,
-            segments=new_segments,
+            spark, path, gen, "erase", base_version=base,
+            segments=[gen],
             geometry_id=rec.get("geometry_id"),
             txn_watermarks=rec.get("txn_watermarks"),
         )
         return n_erased
-    # driver-local paths only (ADVICE r10): the partition swaps below are
-    # os.rename — fail loudly BEFORE any Spark work, never leak __erase
-    local = _require_local_index_path(spark, path, "erase_from_ivf_index")
-    load_ivf_centroids(spark, path)  # loud on an uncommitted index
-    idx = spark.read.parquet(path)
-    k = F.broadcast(keys.select(F.col(id_col)).distinct())
-    hits = idx.join(k, id_col, "left_semi").persist()
-    try:
-        n_erased = hits.count()
-        if n_erased == 0:
-            return 0
-        affected = sorted(
-            r["__cluster"] for r in hits.select("__cluster").distinct().collect()
-        )
-    finally:
-        hits.unpersist(blocking=False)
-    kept = idx.filter(F.col("__cluster").isin(affected)).join(k, id_col, "left_anti")
-    tmp = path.rstrip("/") + "__erase"
-    ltmp = local.rstrip("/") + "__erase"
-    _write_ivf_partitions(kept, tmp)
-    # invalidate the commit record before mutating any partition (see
-    # docstring): rename aside, never delete — the only on-disk copy of
-    # the geometry must survive a crash in the swap window (r10 review)
-    cdir = os.path.join(local, "_centroids")
-    cbak = os.path.join(local, "_centroids__erase")
-    os.rename(cdir, cbak)
-    for c in affected:
-        dst = os.path.join(local, f"__cluster={c}")
-        src = os.path.join(ltmp, f"__cluster={c}")
-        shutil.rmtree(dst)
-        if os.path.exists(src):  # fully-erased cluster: directory disappears
-            os.rename(src, dst)
-    shutil.rmtree(ltmp)
-    os.rename(cbak, cdir)
-    from etl_hiscox_spark.sources.writers import refresh_swapped_path
-
-    refresh_swapped_path(spark, path)
+    stats = _segment_hit_stats(seg_dfs, k, id_col)
+    n_erased = sum(h for _t, h in stats)
+    if n_erased == 0:
+        return 0
+    new_segments = []
+    first_rewritten: str | None = None
+    rewrites: list[tuple[str, "DataFrame"]] = []
+    for name, seg, (total, hits) in zip(seg_names, seg_dfs, stats):
+        if hits == 0:
+            new_segments.append(name)
+            continue
+        if total == hits:
+            continue  # fully-erased segment: drops out of the list
+        gen = genlog.new_generation_name()
+        rewrites.append((gen, seg.join(k, id_col, "left_anti")))
+        new_segments.append(gen)
+        first_rewritten = first_rewritten or gen
+    # hit segments rewrite to DISJOINT staged trees — independent
+    # writes, overlapped from a small pool (guide §2.6); the single
+    # pointer commit below is what publishes them, in order
+    run_overlapped(
+        [
+            (
+                lambda g=gen, kd=kept_df: (
+                    _write_ivf_partitions(kd, genlog._join(root, g)),
+                    _write_ivf_centroids(
+                        spark, genlog._join(root, g), C, quantized=quantized
+                    ),
+                )
+            )
+            for gen, kept_df in rewrites
+        ]
+    )
+    if not new_segments:
+        # fully-erased index: a centroids-only tree is UNREADABLE
+        # (review — probes/erases crash on schema inference and the
+        # index is unrecoverable without a rebuild). Write a READABLE
+        # zero-row dataset carrying the full schema (__cluster rides
+        # as a plain column; Spark writes the schema file for an
+        # empty NON-partitioned frame) plus the geometry record —
+        # probes answer empty, appends stage deltas beside it, the
+        # next compact drops it.
+        gen = genlog.new_generation_name()
+        target = genlog._join(root, gen)
+        local_rows_df(spark, [], schema).write.mode("error").parquet(target)
+        _write_ivf_centroids(spark, target, C, quantized=quantized)
+        new_segments, first_rewritten = [gen], gen
+    genlog.commit_generation(
+        spark, path, first_rewritten or new_segments[0], "erase",
+        base_version=base,
+        segments=new_segments,
+        geometry_id=rec.get("geometry_id"),
+        txn_watermarks=rec.get("txn_watermarks"),
+    )
     return n_erased
 
 
@@ -1373,71 +1189,42 @@ def rebuild_ivf_index(
     ``_centroids`` commit record; ``n_clusters=None`` keeps the current
     cluster count. Returns the new centroid matrix.
 
-    Commit protocol (rename-aside, the same family as
-    :func:`erase_from_ivf_index`): the COMPLETE new index is staged at
-    ``<path>__rebuild`` — partitions first, centroids LAST, so the staged
-    tree is itself a valid index only once finished — then two atomic
-    renames: live → ``<path>__old``, staged → live; ``__old`` is removed
-    last. Every crash window leaves either the untouched live index, or
-    two complete indexes on disk with the live name absent (probes fail
-    loudly on the missing path; ``dedup.recover_staged_rebuild``
-    completes or rolls back the interrupted swap).
-    There is never a half-valid index under the live name, and the
-    pre-rebuild geometry stays on disk until the swap has fully landed.
-    Driver-local paths only, like the other maintenance ops.
+    Commit protocol: the COMPLETE retrained index stages as a fresh
+    generation — partitions first, centroids LAST — and ONE atomic
+    pointer flip makes it live. Every crash window before the flip
+    leaves the old generation live (probes keep answering on the old
+    geometry) and the stage vacuum-reclaimable; the pre-rebuild
+    generation stays readable until ``genlog.vacuum_generations``.
     """
-    from etl_hiscox_spark.operators.dedup import (
-        begin_staged_rebuild,
-        commit_staged_rebuild,
-    )
     from etl_hiscox_spark.sources import genlog
 
-    if genlog.is_generational(spark, path):
-        # object-store form (r12): the retrained index stages as a fresh
-        # generation; the pointer flip replaces the two-rename swap with
-        # one atomic commit, same crash guarantees, any filesystem
-        base, _live_gen = genlog.current_generation(spark, path)
-        rec = genlog.read_pointer(genlog.resolve_root(spark, path), base)
-        segs = [genlog._join(path, s) for s in genlog.pointer_segments(rec)]
-        old_C = load_ivf_centroids(spark, segs[0], resolved=True)
-        k = int(n_clusters) if n_clusters is not None else int(old_C.shape[0])
-        live_df = _read_ivf_segments(spark, segs).drop("__cluster")
-        assigned, C = ivf_index(
-            live_df, embedding_col, id_col, k, seed, train_fraction, max_iter
-        )
-        gen = genlog.new_generation_name()
-        target = genlog._join(path, gen)
-        _write_ivf_partitions(assigned, target)
-        _write_ivf_centroids(spark, target, C, quantized="__codes" in live_df.columns)
-        # a rebuild is a new geometry EPOCH: any append staged against the
-        # old centroids must re-stage, which this fresh id makes loud
-        genlog.commit_generation(
-            spark, path, gen, "rebuild", base_version=base,
-            geometry_id=genlog.new_geometry_id(),
-            txn_watermarks=rec.get("txn_watermarks"),
-        )
-        return C
-
-    # leftover check FIRST (r11 review): after a crash in the two-rename
-    # swap window the live path is absent and load_ivf_centroids' "rebuild
-    # with write_ivf_index" advice would direct the operator to orphan the
-    # recovery copies — begin_staged_rebuild's leftover message is the
-    # correct recovery (shared protocol with rebuild_minhash_index)
-    tmp = begin_staged_rebuild(spark, path, "rebuild_ivf_index")
-    old_C = load_ivf_centroids(spark, path)  # loud on an uncommitted index
+    base, _live_gen = genlog.current_generation(spark, path)
+    rec = genlog.read_pointer(genlog.resolve_root(spark, path), base)
+    segs = [genlog._join(path, s) for s in genlog.pointer_segments(rec)]
+    old_C = load_ivf_centroids(spark, segs[0], resolved=True)
     k = int(n_clusters) if n_clusters is not None else int(old_C.shape[0])
-    live = spark.read.parquet(path).drop("__cluster")
+    # canonical row order for the fit: k-means|| draws its init samples
+    # per input partition, so the fitted geometry depends on how the live
+    # rows are physically split — the raw segment union (build rows, then
+    # each delta's) gave a worse fit than the same rows read in id order
+    # (a planted drifted batch stayed above the rebuild trigger for 10 of
+    # 12 data seeds unsorted, 0 of 12 sorted). Sorting by id makes the
+    # retrain independent of the head's segment shape.
+    live_df = _read_ivf_segments(spark, segs).drop("__cluster").orderBy(id_col)
     assigned, C = ivf_index(
-        live, embedding_col, id_col, k, seed, train_fraction, max_iter
+        live_df, embedding_col, id_col, k, seed, train_fraction, max_iter
     )
-    _write_ivf_partitions(assigned, tmp)
-    # quantized layouts survive a rebuild: the __codes/__qscale columns
-    # ride through ivf_index as ordinary payload, so the staged commit
-    # record must carry the same flag for future appends
-    _write_ivf_centroids(
-        spark, tmp, C, quantized="__codes" in live.columns
+    gen = genlog.new_generation_name()
+    target = genlog._join(path, gen)
+    _write_ivf_partitions(assigned, target)
+    _write_ivf_centroids(spark, target, C, quantized="__codes" in live_df.columns)
+    # a rebuild is a new geometry EPOCH: any append staged against the
+    # old centroids must re-stage, which this fresh id makes loud
+    genlog.commit_generation(
+        spark, path, gen, "rebuild", base_version=base,
+        geometry_id=genlog.new_geometry_id(),
+        txn_watermarks=rec.get("txn_watermarks"),
     )
-    commit_staged_rebuild(spark, path, "rebuild_ivf_index")
     return C
 
 

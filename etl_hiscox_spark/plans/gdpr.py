@@ -129,10 +129,9 @@ def erase_subject(
                 "n_files_rewritten": int(n),
             }
 
-        # residual scans of index stores resolve the LIVE generation for
-        # the pointer layout (reading a generational root raw would scan
-        # every superseded generation — r12); flat layouts resolve to
-        # themselves
+        # residual scans of index stores resolve the LIVE generation
+        # (reading a generational root raw would scan every superseded
+        # generation — r12)
         from etl_hiscox_spark.sources.genlog import live_index_paths
 
         def do_ivf(path: str, id_col: str) -> dict:

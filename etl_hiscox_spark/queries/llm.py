@@ -224,31 +224,45 @@ def l2_incremental_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _os.path.join(_scratch("l2_incr_index", sf_dir), "minhash_index")
     old = docs.filter(F.col("doc_id") % 2 == 0)
     new = docs.filter(F.col("doc_id") % 2 == 1)
-    write_minhash_index(old, "text", "doc_id", path, num_hashes=24, num_bands=6, generational=False)
+    write_minhash_index(old, "text", "doc_id", path, num_hashes=24, num_bands=6)
     out = probe_minhash_index(
         new, "text", "doc_id", path, verify_df=docs, threshold=0.8
     )
     return out.select("new_id", "dup_of", F.round("jaccard", 6).alias("jaccard"))
 
 
-def _parquet_content_checksum(
-    spark: SparkSession, path: str, exclude_col: str | None = None
-) -> tuple:
-    """(row count, exact decimal sum of xxhash64 over every column) of a
-    parquet dir — the content-equality invariant the index-maintenance
-    queries raise on. decimal(38,0): a long sum of ~2^63-scale hashes
-    overflows under ANSI mode; decimal is exact at any corpus size.
-    ``exclude_col`` drops one column from the hash — the rebuild
-    invariant, where row payloads must survive byte-for-byte while the
-    ``__cluster`` label (the thing a rebuild exists to change) is left
-    out."""
-    d = spark.read.parquet(path)
+def _content_checksum(d: DataFrame, exclude_col: str | None = None) -> tuple:
+    """(row count, exact decimal sum of xxhash64 over every column) of an
+    index's live rows — the content-equality invariant the
+    index-maintenance queries raise on. decimal(38,0): a long sum of
+    ~2^63-scale hashes overflows under ANSI mode; decimal is exact at any
+    corpus size. ``exclude_col`` drops one column from the hash — the
+    rebuild invariant, where row payloads must survive byte-for-byte
+    while the ``__cluster`` label (the thing a rebuild exists to change)
+    is left out."""
     cols = sorted(c for c in d.columns if c != exclude_col)
     row = d.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.xxhash64(*[F.col(c) for c in cols]).cast("decimal(38,0)")).alias("h"),
     ).first()
     return (row["n"], row["h"])
+
+
+def _live_minhash_buckets(spark: SparkSession, root: str) -> DataFrame:
+    """The bucket table of every live segment of a minhash index."""
+    from etl_hiscox_spark.sources.genlog import live_index_paths
+
+    return spark.read.parquet(
+        *[os.path.join(p, "buckets") for p in live_index_paths(spark, root)]
+    )
+
+
+def _live_ivf_rows(spark: SparkSession, root: str) -> DataFrame:
+    """Every live row of an IVF index, across its segments."""
+    from etl_hiscox_spark.operators.similarity import _read_ivf_segments
+    from etl_hiscox_spark.sources.genlog import live_index_paths
+
+    return _read_ivf_segments(spark, live_index_paths(spark, root))
 
 
 def _qvec_and(emb: DataFrame, first_op):
@@ -269,19 +283,24 @@ def _qvec_and(emb: DataFrame, first_op):
     )
 
 
-def _parquet_file_count(path: str, exclude: str | None = None) -> int:
-    """Data-file count under ``path`` (optionally skipping one subdir name,
-    e.g. the IVF _centroids commit record)."""
-    import os as _os
+def _live_file_count(
+    spark: SparkSession, root: str, subdir: str | None = None,
+    exclude: str | None = None,
+) -> int:
+    """Data-file count across the live segments of the index at ``root``
+    (optionally inside one subdir of each segment, e.g. the minhash
+    ``buckets``; optionally skipping one subdir name, e.g. the IVF
+    _centroids commit record)."""
+    from etl_hiscox_spark.sources.genlog import live_index_paths
 
     return sum(
         1
-        for root, _, files in _os.walk(path)
+        for seg in live_index_paths(spark, root)
+        for d, _, files in os.walk(os.path.join(seg, subdir) if subdir else seg)
         for f in files
         if f.endswith(".parquet")
-        and (exclude is None or _os.sep + exclude not in root)
+        and (exclude is None or os.sep + exclude not in d)
     )
-
 
 
 @register(
@@ -307,12 +326,13 @@ def _parquet_file_count(path: str, exclude: str | None = None) -> int:
 def l2_lsh_compact_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # LSH index MAINTENANCE lifecycle (VERDICT r9 item 3): the historical
     # half is ingested in TWO batches (initial write + one append — each
-    # append adds a file set to <path>/buckets), then COMPACTED
-    # (operators/dedup.compact_minhash_index: range-partitioned + sorted
-    # on the (band, bucket) probe key, meta-last commit protocol) before
-    # the odd-id batch probes it. Loud invariants before the oracle sees
-    # the probe: bucket-table content checksum identical across the
-    # rewrite, file count strictly reduced. The declared output is then
+    # append commits a delta segment with its own bucket files), then
+    # COMPACTED (operators/dedup.compact_minhash_index: every segment
+    # merged into one generation, range-partitioned + sorted on the
+    # (band, bucket) probe key, committed by pointer flip) before the
+    # odd-id batch probes it. Loud invariants before the oracle sees the
+    # probe: live bucket-table content checksum identical across the
+    # rewrite, live file count strictly reduced. The declared output is then
     # l2_incremental_probe's exact cross-batch Jaccard contract — proof
     # the probe is byte-equivalent on the compacted index.
     import os as _os
@@ -329,18 +349,17 @@ def l2_lsh_compact_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     new = docs.filter(F.col("doc_id") % 2 == 1)
     write_minhash_index(
         docs.filter(F.col("doc_id") % 4 == 0), "text", "doc_id", path,
-        num_hashes=24, num_bands=6, generational=False,
+        num_hashes=24, num_bands=6,
     )
     write_minhash_index(
         docs.filter(F.col("doc_id") % 4 == 2), "text", "doc_id", path,
         num_hashes=24, num_bands=6, mode="append",
     )
-    buckets = _os.path.join(path, "buckets")
-    sig_before = _parquet_content_checksum(spark, buckets)
-    files_before = _parquet_file_count(buckets)
+    sig_before = _content_checksum(_live_minhash_buckets(spark, path))
+    files_before = _live_file_count(spark, path, subdir="buckets")
     compact_minhash_index(spark, path)
-    sig_after = _parquet_content_checksum(spark, buckets)
-    files_after = _parquet_file_count(buckets)
+    sig_after = _content_checksum(_live_minhash_buckets(spark, path))
+    files_after = _live_file_count(spark, path, subdir="buckets")
     if sig_after != sig_before:
         raise ValueError(
             f"compact_minhash_index changed bucket content: {sig_before} -> {sig_after}"
@@ -380,8 +399,8 @@ def l2_lsh_erase_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # erase_from_minhash_index): the index retains a banded fingerprint
     # of every ingested doc, so right-to-be-forgotten reaches it like
     # the primary table. History = even doc_ids; erase doc_id % 10 == 6
-    # from the index (meta-last commit protocol — an interrupted erasure
-    # rejects loudly); the odd-id batch then probes it and the declared
+    # from the index (kept rows staged as a new generation, published by
+    # pointer flip); the odd-id batch then probes it and the declared
     # output must equal the exact cross-batch Jaccard graph EXCLUDING
     # the erased docs from the dup_of side — a fingerprint surviving
     # erasure (or collateral bucket loss) hash-fails. Loud invariants:
@@ -400,7 +419,7 @@ def l2_lsh_erase_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _os.path.join(_scratch("l2_lsh_erase", sf_dir), "minhash_index")
     old = docs.filter(F.col("doc_id") % 2 == 0)
     new = docs.filter(F.col("doc_id") % 2 == 1)
-    write_minhash_index(old, "text", "doc_id", path, num_hashes=24, num_bands=6, generational=False)
+    write_minhash_index(old, "text", "doc_id", path, num_hashes=24, num_bands=6)
     erase = old.filter(F.col("doc_id") % 10 == 6).select("doc_id")
     expected = erase.count() * 6  # num_bands rows per indexed doc
     n_erased = erase_from_minhash_index(spark, path, erase, "doc_id")
@@ -409,9 +428,7 @@ def l2_lsh_erase_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"erase_from_minhash_index erased {n_erased} bucket rows, expected {expected}"
         )
     remaining = (
-        spark.read.parquet(_os.path.join(path, "buckets"))
-        .filter(F.col("doc") % 10 == 6)
-        .count()
+        _live_minhash_buckets(spark, path).filter(F.col("doc") % 10 == 6).count()
     )
     if remaining:
         raise ValueError(f"{remaining} erased docs still fingerprinted in the index")
@@ -450,14 +467,14 @@ def l2_lsh_rebuild_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # IVF side closed with l3_ivf_rebuild_probe): the meta pins the
     # banding forever by design, so changing recall requirements needs
     # operators/dedup.rebuild_minhash_index — re-shingle the supplied
-    # corpus under NEW parameters and swap atomically under the
-    # rename-aside protocol. History = even doc_ids indexed at
+    # corpus under NEW parameters, staged as a new generation and
+    # committed by ONE pointer flip. History = even doc_ids indexed at
     # (24 hashes, 6 bands); rebuild migrates the live index to
     # (32 hashes, 8 bands); the odd-id batch then probes it reading the
     # NEW banding from the meta. Loud invariants before the oracle sees
-    # the probe: meta reports the migrated parameters, and the bucket
-    # table holds exactly 8 rows per indexed doc (6-per-doc would mean
-    # the swap served the stale index).
+    # the probe: meta reports the migrated parameters, and the live
+    # bucket table holds exactly 8 rows per indexed doc (6-per-doc would
+    # mean the pointer still served the stale generation).
     import os as _os
 
     from etl_hiscox_spark.operators.dedup import (
@@ -472,7 +489,7 @@ def l2_lsh_rebuild_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _os.path.join(_scratch("l2_lsh_rebuild", sf_dir), "minhash_index")
     old = docs.filter(F.col("doc_id") % 2 == 0)
     new = docs.filter(F.col("doc_id") % 2 == 1)
-    write_minhash_index(old, "text", "doc_id", path, num_hashes=24, num_bands=6, generational=False)
+    write_minhash_index(old, "text", "doc_id", path, num_hashes=24, num_bands=6)
     migrated = rebuild_minhash_index(
         spark, old, "text", "doc_id", path, num_hashes=32, num_bands=8
     )
@@ -481,7 +498,7 @@ def l2_lsh_rebuild_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"rebuild_minhash_index did not migrate the meta: {migrated}"
         )
     n_docs = old.count()
-    n_rows = spark.read.parquet(_os.path.join(path, "buckets")).count()
+    n_rows = _live_minhash_buckets(spark, path).count()
     if n_rows != 8 * n_docs:
         raise ValueError(
             f"rebuilt bucket table has {n_rows} rows for {n_docs} docs — "
@@ -553,7 +570,7 @@ def l2_lsh_gen_lifecycle_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     old = docs.filter(F.col("doc_id") % 2 == 0)
     new = docs.filter(F.col("doc_id") % 2 == 1)
     write_minhash_index(
-        old, "text", "doc_id", root, num_hashes=24, num_bands=6, generational=True
+        old, "text", "doc_id", root, num_hashes=24, num_bands=6
     )
     erase = old.filter(F.col("doc_id") % 10 == 6).select("doc_id")
     # the erase-predicate count reads the base table only — overlap it
@@ -911,7 +928,7 @@ def l3_ivf_quantized_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: write_ivf_index(
             emb.filter(F.col("vec_id") % 2 == 0), path, "embedding", "vec_id",
             centroids=random_hyperplanes(dim=64, n_planes=16, seed=42),
-            quantize=True, generational=False,
+            quantize=True,
         ),
     )
     append_to_ivf_index(emb.filter(F.col("vec_id") % 2 == 1), path, "embedding", "vec_id")
@@ -1998,7 +2015,7 @@ def l3_ivf_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qvec, centroids = _qvec_and(
         emb,
         lambda: write_ivf_index(
-            emb, path, "embedding", "vec_id", n_clusters=16, seed=42, generational=False
+            emb, path, "embedding", "vec_id", n_clusters=16, seed=42
         ),
     )
     out = ivf_probe_topk(
@@ -2039,7 +2056,7 @@ def l3_ivf_append_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         lambda: write_ivf_index(
             emb.filter(F.col("vec_id") % 2 == 0), path, "embedding", "vec_id",
-            n_clusters=16, seed=42, max_iter=4, generational=False,
+            n_clusters=16, seed=42, max_iter=4,
         ),
     )
     append_to_ivf_index(emb.filter(F.col("vec_id") % 2 == 1), path, "embedding", "vec_id")
@@ -2082,17 +2099,17 @@ def l3_ivf_compact_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         lambda: write_ivf_index(
             emb.filter(F.col("vec_id") % 2 == 0), path, "embedding", "vec_id",
-            centroids=random_hyperplanes(dim=64, n_planes=16, seed=42), generational=False,
+            centroids=random_hyperplanes(dim=64, n_planes=16, seed=42),
         ),
     )
     append_to_ivf_index(emb.filter(F.col("vec_id") % 4 == 1), path, "embedding", "vec_id")
     append_to_ivf_index(emb.filter(F.col("vec_id") % 4 == 3), path, "embedding", "vec_id")
 
-    sig_before = _parquet_content_checksum(spark, path)
-    files_before = _parquet_file_count(path, exclude="_centroids")
+    sig_before = _content_checksum(_live_ivf_rows(spark, path))
+    files_before = _live_file_count(spark, path, exclude="_centroids")
     compact_ivf_index(spark, path)
-    sig_after = _parquet_content_checksum(spark, path)
-    files_after = _parquet_file_count(path, exclude="_centroids")
+    sig_after = _content_checksum(_live_ivf_rows(spark, path))
+    files_after = _live_file_count(spark, path, exclude="_centroids")
     if sig_after != sig_before:
         raise ValueError(
             f"compact_ivf_index changed index content: {sig_before} -> {sig_after}"
@@ -2122,10 +2139,10 @@ def l3_ivf_erase_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vector, or drifted centroid geometry hash-fails. Loud invariants
     # before the oracle sees the probe: the erased count must match the
     # predicate's cardinality and zero erased ids remain readable.
-    # Only AFFECTED cluster partitions are rewritten (the erase set
-    # semi-joins to its clusters; unaffected partitions and _centroids
-    # stay byte-identical) — at 100 TB erasure cost scales with the
-    # erased ids' cluster footprint, not the index.
+    # The kept rows stage as a new generation with the unchanged
+    # _centroids record and publish by pointer flip; the read-back goes
+    # through the live pointer, so a stale generation still being served
+    # would surface the erased ids here.
     import os as _os
 
     from etl_hiscox_spark.operators.similarity import (
@@ -2144,7 +2161,7 @@ def l3_ivf_erase_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         lambda: write_ivf_index(
             emb, path, "embedding", "vec_id",
-            centroids=random_hyperplanes(dim=64, n_planes=16, seed=42), generational=False,
+            centroids=random_hyperplanes(dim=64, n_planes=16, seed=42),
         ),
     )
     erase = emb.filter(F.col("vec_id") % 10 == 7).select("vec_id")
@@ -2155,7 +2172,7 @@ def l3_ivf_erase_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"erase_from_ivf_index erased {n_erased} rows, predicate covers {expected}"
         )
     remaining = (
-        spark.read.parquet(path).filter(F.col("vec_id") % 10 == 7).count()
+        _live_ivf_rows(spark, path).filter(F.col("vec_id") % 10 == 7).count()
     )
     if remaining:
         raise ValueError(f"{remaining} erased vec_ids still readable in the index")
@@ -2309,7 +2326,7 @@ def l3_ivf_drift_diag(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _os.path.join(_scratch("l3_ivf_drift", sf_dir), "ivf_index")
     C = random_hyperplanes(dim=64, n_planes=8, seed=7)
     write_ivf_index(
-        emb.filter(F.col("vec_id") % 2 == 0), path, "embedding", "vec_id", centroids=C, generational=False
+        emb.filter(F.col("vec_id") % 2 == 0), path, "embedding", "vec_id", centroids=C
     )
     batch = emb.filter(F.col("vec_id") % 2 == 1)
     return ivf_centroid_drift(spark, path, batch, "embedding")
@@ -2323,9 +2340,9 @@ def l3_ivf_rebuild_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # "drifted" centroids the 1.25x trigger exists to flag), the other
     # half is appended against that frozen geometry, then
     # operators/similarity.rebuild_ivf_index retrains k-means over the
-    # LIVE corpus and re-materializes the layout under the rename-aside
-    # commit protocol (stage complete at __rebuild, two atomic renames,
-    # pre-rebuild geometry on disk until the swap lands). Loud invariants
+    # LIVE corpus and re-materializes the layout as a new generation
+    # committed by ONE pointer flip (the pre-rebuild generation stays
+    # live until the flip lands). Loud invariants
     # before the oracle sees the probe: (1) the row PAYLOAD checksum
     # (every column except the __cluster label, which rebuild exists to
     # change) is identical across the rebuild — a dropped/duplicated/
@@ -2358,16 +2375,16 @@ def l3_ivf_rebuild_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         lambda: write_ivf_index(
             emb.filter(F.col("vec_id") % 2 == 0), path, "embedding", "vec_id",
-            centroids=planes, generational=False,
+            centroids=planes,
         ),
     )
     append_to_ivf_index(emb.filter(F.col("vec_id") % 2 == 1), path, "embedding", "vec_id")
 
-    sig_before = _parquet_content_checksum(spark, path, exclude_col="__cluster")
+    sig_before = _content_checksum(_live_ivf_rows(spark, path), exclude_col="__cluster")
     # max_iter=4: the probe below is centroid-independent (full probe), so
     # the fit is capped — see l3_ivf_append_probe
     C = rebuild_ivf_index(spark, path, "embedding", "vec_id", max_iter=4)
-    sig_after = _parquet_content_checksum(spark, path, exclude_col="__cluster")
+    sig_after = _content_checksum(_live_ivf_rows(spark, path), exclude_col="__cluster")
     if sig_after != sig_before:
         raise ValueError(
             f"rebuild_ivf_index changed the row payload: {sig_before} -> {sig_after}"
@@ -2434,7 +2451,7 @@ def l3_ivf_gen_lifecycle_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda: write_ivf_index(
                 emb.filter(F.col("vec_id") % 2 == 0), root, "embedding", "vec_id",
                 centroids=random_hyperplanes(dim=64, n_planes=16, seed=42),
-                quantize=True, generational=True,
+                quantize=True,
             ),
         ]
     )
@@ -2516,7 +2533,7 @@ def l3_ivf_delta_append_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: write_ivf_index(
             emb.filter(F.col("vec_id") % 2 == 0), root, "embedding", "vec_id",
             centroids=random_hyperplanes(dim=64, n_planes=16, seed=42),
-            quantize=True, generational=True,
+            quantize=True,
         ),
     )
     append_to_ivf_index(emb.filter(F.col("vec_id") % 2 == 1), root, "embedding", "vec_id")
@@ -2531,22 +2548,8 @@ def l3_ivf_delta_append_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _segments_checksum() -> tuple:
         # ONE action over the segment union instead of one per segment
         # (r17): count and the decimal hash-sum are distributive, so the
-        # union checksum equals the summed per-segment checksums — a
-        # two-segment head pays one job, not two. (Union via
-        # _read_ivf_segments: each gen-* is its own partition tree, so a
-        # single multi-root read is refused by Spark.)
-        from etl_hiscox_spark.operators.similarity import _read_ivf_segments
-
-        segs = genlog.live_index_paths(spark, root)
-        d = _read_ivf_segments(spark, segs)
-        cols = sorted(d.columns)
-        row = d.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.xxhash64(*[F.col(c) for c in cols]).cast("decimal(38,0)")
-            ).alias("h"),
-        ).first()
-        return (row["n"], row["h"] or 0)
+        # union checksum equals the summed per-segment checksums
+        return _content_checksum(_live_ivf_rows(spark, root))
 
     # the codes-only probe and the content checksum both READ the same
     # two-segment head — independent actions, overlapped (r17, guide §2.6)
@@ -2581,38 +2584,42 @@ def l3_ivf_delta_append_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("l3_ivf_recover_rebuild_probe", oracle=_COSINE_ORACLE)
 def l3_ivf_recover_rebuild_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # CRASH RECOVERY of the flat layout's staged rebuild (r12, VERDICT
-    # r11 item 4 — operators/dedup.recover_staged_rebuild): the rebuild
-    # protocol stages the complete retrained index at <path>__rebuild and
-    # commits with two renames; this query simulates the worst crash
-    # window — AFTER the live index moved to __old, BEFORE the stage was
-    # promoted (live name absent, probes would fail loudly) — and recovery
-    # must COMPLETE the swap, because the stage is complete by protocol
-    # the moment the first rename ran. Build on even vec_ids with pinned
-    # planes, append the odd half, stage a k-means retrain of the live
-    # corpus exactly as rebuild_ivf_index would, crash, recover. Loud
-    # invariants before the oracle sees the probe: recovery reports
-    # 'completed_swap'; the row payload checksum (everything except the
-    # __cluster label the rebuild exists to change) is identical across
-    # crash + recovery; the recovered geometry is the RETRAINED one (a
-    # rollback would leave the pinned planes); and a second recover is a
-    # 'none' no-op. The probe then reads the recovered index and must
-    # return the exact brute-force top-10 over the full corpus
-    # (n_probe = n_clusters, recall-exact by construction).
+    # CRASH RECOVERY of an interrupted rebuild (r12, VERDICT r11 item 4),
+    # on the generational commit path: rebuild_ivf_index stages the
+    # complete retrained index as a fresh gen-* tree and publishes it
+    # with ONE pointer commit. This query simulates the worst crash
+    # window — the retrained generation fully staged, the pointer NOT
+    # committed — and checks that the old head stayed live, that vacuum
+    # reclaims the orphaned stage, and that a real rebuild then commits.
+    # Build on even vec_ids with pinned planes, append the odd half,
+    # stage a k-means retrain of the live corpus exactly as
+    # rebuild_ivf_index would, crash. Loud invariants before the oracle
+    # sees the probe: after the crash the pointer history is still
+    # [build, append] and the live geometry is still the pinned planes
+    # (the stage never became visible); vacuum removes exactly the one
+    # orphaned stage; the real rebuild records [build, append, rebuild],
+    # keeps the row payload checksum (everything except the __cluster
+    # label the rebuild exists to change) identical and retrains the
+    # geometry. The probe then reads the rebuilt index and must return
+    # the exact brute-force top-10 over the full corpus (n_probe =
+    # n_clusters, recall-exact by construction).
     import os as _os
 
     import numpy as _np
 
-    from etl_hiscox_spark.operators.dedup import recover_staged_rebuild
     from etl_hiscox_spark.operators.similarity import (
+        _write_ivf_centroids,
+        _write_ivf_partitions,
         append_to_ivf_index,
         ivf_index,
         ivf_probe_topk,
         load_ivf_centroids,
         random_hyperplanes,
+        rebuild_ivf_index,
         write_ivf_index,
     )
     from etl_hiscox_spark.queries.writes import _scratch
+    from etl_hiscox_spark.sources import genlog
 
     emb = load_table(spark, "embeddings", sf_dir)
     path = _os.path.join(_scratch("l3_ivf_recover", sf_dir), "ivf_index")
@@ -2621,38 +2628,42 @@ def l3_ivf_recover_rebuild_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         lambda: write_ivf_index(
             emb.filter(F.col("vec_id") % 2 == 0), path, "embedding", "vec_id",
-            centroids=planes, generational=False,
+            centroids=planes,
         ),
     )
     append_to_ivf_index(emb.filter(F.col("vec_id") % 2 == 1), path, "embedding", "vec_id")
-    sig_before = _parquet_content_checksum(spark, path, exclude_col="__cluster")
+    sig_before = _content_checksum(_live_ivf_rows(spark, path), exclude_col="__cluster")
 
     # stage the retrain exactly as rebuild_ivf_index does (max_iter=4:
-    # the full probe below is centroid-independent — l3_ivf_append_probe)
-    live = spark.read.parquet(path).drop("__cluster")
-    assigned, C = ivf_index(live, "embedding", "vec_id", 16, 42, 1.0, 4)
-    from etl_hiscox_spark.operators.similarity import (
-        _write_ivf_centroids,
-        _write_ivf_partitions,
-    )
+    # the full probe below is centroid-independent — l3_ivf_append_probe),
+    # then CRASH before the pointer commit
+    live = _live_ivf_rows(spark, path).drop("__cluster").orderBy("vec_id")
+    assigned, C_staged = ivf_index(live, "embedding", "vec_id", 16, 42, 1.0, 4)
+    stage = genlog._join(path, genlog.new_generation_name())
+    _write_ivf_partitions(assigned, stage)
+    _write_ivf_centroids(spark, stage, C_staged, quantized=False)
 
-    _write_ivf_partitions(assigned, path + "__rebuild")
-    _write_ivf_centroids(spark, path + "__rebuild", C, quantized=False)
-    _os.rename(path, path + "__old")  # first rename landed, then CRASH
+    ops = [g["operation"] for g in genlog.list_generations(spark, path)]
+    if ops != ["build", "append"]:
+        raise ValueError(f"an uncommitted stage changed the pointer history: {ops}")
+    if not _np.allclose(load_ivf_centroids(spark, path), planes):
+        raise ValueError("an uncommitted stage replaced the live geometry")
+    # keep both committed pointers; age gate off — no op is in flight
+    n_vacuumed = genlog.vacuum_generations(spark, path, keep_last=2, min_age_seconds=0)
+    if n_vacuumed != 1 or _os.path.exists(stage):
+        raise ValueError(f"vacuum removed {n_vacuumed} generations, expected the 1 stage")
 
-    action = recover_staged_rebuild(spark, path)
-    if action != "completed_swap":
-        raise ValueError(f"recovery took {action!r}, expected completed_swap")
-    sig_after = _parquet_content_checksum(spark, path, exclude_col="__cluster")
+    C = rebuild_ivf_index(spark, path, "embedding", "vec_id", max_iter=4)
+    ops = [g["operation"] for g in genlog.list_generations(spark, path)]
+    if ops != ["build", "append", "rebuild"]:
+        raise ValueError(f"pointer history records {ops}")
+    sig_after = _content_checksum(_live_ivf_rows(spark, path), exclude_col="__cluster")
     if sig_after != sig_before:
         raise ValueError(
-            f"recovery changed the row payload: {sig_before} -> {sig_after}"
+            f"crash + rebuild changed the row payload: {sig_before} -> {sig_after}"
         )
-    C_live = load_ivf_centroids(spark, path)
-    if C_live.shape != planes.shape or _np.allclose(C_live, planes):
-        raise ValueError("recovery restored the stale geometry, not the retrain")
-    if recover_staged_rebuild(spark, path) != "none":
-        raise ValueError("a second recovery was not a no-op")
+    if C.shape != planes.shape or _np.allclose(C, planes):
+        raise ValueError("the rebuild after recovery did not retrain the geometry")
     out = ivf_probe_topk(
         spark, path, None, "embedding", "vec_id", qvec, k=10, n_probe=16
     )
@@ -2965,6 +2976,7 @@ def t33_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     # splits — 0 by construction, and BOTH engines recompute it from
     # their own independent pair graph + assignment, so a leak in either
     # pipeline surfaces as a nonzero (and a hash fail).
+    from etl_hiscox_spark.operators.caching import adopt_caches, attach_owned_caches
     from etl_hiscox_spark.operators.dedup import (
         confirmed_minhash_pairs,
         connected_components,
@@ -2976,11 +2988,8 @@ def t33_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the cross-split proof count — so a lazy persist computes the
     # LSH+Jaccard pipeline once: CC's eager edge materialization populates
     # it, the final action's cross branch reads the cache (r18, guide §5)
-    confirmed = (
-        confirmed_minhash_pairs(docs, "text", "doc_id", threshold=0.8)
-        .select("id_a", "id_b")
-        .persist()
-    )
+    pairs = confirmed_minhash_pairs(docs, "text", "doc_id", threshold=0.8)
+    confirmed = pairs.select("id_a", "id_b").persist()
     comp = connected_components(confirmed)
     with_grp = docs.join(comp, docs["doc_id"] == comp["node"], "left").select(
         "doc_id", F.coalesce("component", "doc_id").alias("group_key")
@@ -2996,7 +3005,7 @@ def t33_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("__sa") != F.col("__sb"))
         .agg(F.count(F.lit(1)).alias("cross_split_pairs"))
     )
-    return (
+    out = (
         assigned.groupBy("split")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -3005,6 +3014,9 @@ def t33_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(cross))
         .orderBy("split")
     )
+    # cache ownership travels with the result (ADVICE r17): this query's
+    # pair-graph persist plus the Jaccard stem the select above detached
+    return attach_owned_caches(adopt_caches(out, pairs), [confirmed])
 
 
 @register(

@@ -866,12 +866,18 @@ def s19_gdpr_erase_subject(spark: SparkSession, sf_dir: str) -> DataFrame:
     # indexed doc). The declared output is the per-store post-erase row
     # count — base/txn read back the kept documents, txn_v0 proves the
     # REWRITTEN HISTORY still time-travels to the even-id half minus the
-    # subject, ivf/minhash count their own layouts — each with a pure
+    # subject, ivf/minhash count their live segments through the index
+    # pointer — each with a pure
     # exclusion-predicate SQL twin, the same oracle shape as the
     # l3/l2 erase probes.
     from etl_hiscox_spark.operators.dedup import write_minhash_index
-    from etl_hiscox_spark.operators.similarity import random_hyperplanes, write_ivf_index
+    from etl_hiscox_spark.operators.similarity import (
+        _read_ivf_segments,
+        random_hyperplanes,
+        write_ivf_index,
+    )
     from etl_hiscox_spark.plans.gdpr import erase_subject
+    from etl_hiscox_spark.sources.genlog import live_index_paths
     from etl_hiscox_spark.sources.txnlog import TxnTable
 
     root = _scratch("s19_gdpr", sf_dir)
@@ -903,9 +909,8 @@ def s19_gdpr_erase_subject(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda: write_ivf_index(
                 emb, ivf, "embedding", "vec_id",
                 centroids=random_hyperplanes(dim=64, n_planes=16, seed=42),
-                generational=False,
             ),
-            lambda: write_minhash_index(docs, "text", "doc_id", mh, generational=False),
+            lambda: write_minhash_index(docs, "text", "doc_id", mh),
         ]
     )
 
@@ -954,8 +959,10 @@ def s19_gdpr_erase_subject(spark: SparkSession, sf_dir: str) -> DataFrame:
             run_overlapped(
                 [
                     lambda: spark.read.parquet(base).count(),
-                    lambda: spark.read.parquet(ivf).count(),
-                    lambda: spark.read.parquet(os.path.join(mh, "buckets"))
+                    lambda: _read_ivf_segments(spark, live_index_paths(spark, ivf)).count(),
+                    lambda: spark.read.parquet(
+                        *[os.path.join(p, "buckets") for p in live_index_paths(spark, mh)]
+                    )
                     .select("doc").distinct().count(),
                     lambda: t.read().count(),
                     lambda: t.read(0).count(),

@@ -2,11 +2,13 @@
 VERDICT r11 item 1 — the single biggest gap between the code and its own
 100 TB story).
 
-The index maintenance ops (compact / erase / rebuild, both layouts)
-previously committed by ``os.rename``-swapping data directories — correct
-and crash-safe, but DRIVER-LOCAL ONLY: at the 100 TB design point the
-index lives on an object store, where directory rename does not exist.
-This module is the portable protocol, the same manifest-pointer design as
+The index maintenance ops (compact / erase / rebuild) once committed by
+``os.rename``-swapping data directories — correct and crash-safe, but
+DRIVER-LOCAL ONLY: at the 100 TB design point the index lives on an
+object store, where directory rename does not exist. This module is the
+portable protocol and the ONLY one every minhash and IVF index commits
+through (legacy flat roots are read-only until
+``dedup.migrate_flat_index_to_generational``), the same manifest-pointer design as
 :mod:`txnlog` (staged files + a tiny atomic commit record; the Delta
 Lake VLDB'20 log pattern applied to an index directory):
 
@@ -114,12 +116,12 @@ def resolve_root(spark, root: str) -> str:
 
 
 def is_generational(spark, root: str) -> bool:
-    """True when ``<root>/_gen_log`` exists — the layout marker every
-    index entry point checks before resolving. A scheme-less path on a
+    """True when ``<root>/_gen_log`` exists — the layout marker that
+    separates a generational root from a legacy flat one. A scheme-less path on a
     non-file defaultFS is answered ``False`` without touching the
     filesystem: generational roots are always addressed by qualified URI
     (:func:`resolve_root` enforces it at build/commit time), so a path
-    this function cannot resolve cannot name one — and the flat-layout
+    this function cannot resolve cannot name one — and legacy flat-root
     probes that only ever hand the path to Spark must keep working."""
     from pyarrow import fs as pafs
 
@@ -662,9 +664,12 @@ def interpose_head_resolution(hook):
 
 
 def current_generation(spark, root: str) -> tuple[int, str]:
-    """(pointer version, live generation dir name) — loud when the log is
-    present but empty (an interrupted first build: the generation data
-    may exist but nothing ever became live). Resolution goes through the
+    """(pointer version, live generation dir name) — loud when the root
+    has no pointer log at all (a legacy flat index: every maintenance op
+    resolves the head here first, so this one message points them all at
+    the migration) and when the log is present but empty (an interrupted
+    first build: the generation data may exist but nothing ever became
+    live). Resolution goes through the
     checkpoint hint (:func:`_head_version`) — O(commits-since-checkpoint)
     probes on the hot path, LIST only as fallback."""
     hook = _HEAD_INTERPOSE.get()
@@ -680,6 +685,13 @@ def current_generation(spark, root: str) -> tuple[int, str]:
 def _current_generation(spark, root: str) -> tuple[int, str]:
     root = resolve_root(spark, root)
     head = _head_version(root)
+    if head is None and not is_generational(spark, root):
+        raise ValueError(
+            f"index root {root!r} has no generation log — a legacy FLAT "
+            "index is read-only (probes still answer); upgrade it in place "
+            "with migrate_flat_index_to_generational(spark, root) before "
+            "any append/compact/erase/rebuild, or build a fresh index there"
+        )
     if head is None:
         raise ValueError(
             f"generational index at {root!r} has no committed pointer — "
@@ -700,11 +712,13 @@ def pointer_segments(record: dict) -> list[str]:
 
 def live_index_paths(spark, root: str) -> list[str]:
     """The directories a reader must scan: the live pointer's segment
-    list for a generational root (one entry after a build/compact/erase/
-    rebuild; build + one delta per OCC append until the next compact
-    merges them — the LSM shape), ``[root]`` for the flat layout. Every
-    index read path calls this once, so both layouts and both segment
-    shapes share all downstream code."""
+    list (one entry after a build/compact/erase/rebuild; build + one
+    delta per OCC append until the next compact merges them — the LSM
+    shape). ``[root]`` is the LEGACY-READ case: a flat index written
+    before every build became generational still answers probes from
+    its root until ``migrate_flat_index_to_generational`` upgrades it.
+    Every index read path calls this once, so all downstream code is
+    layout- and segment-shape-agnostic."""
     if not is_generational(spark, root):
         return [root]
     version, _ = current_generation(spark, root)

@@ -26,6 +26,29 @@ BASE = (
 )
 
 
+def _live_segments(spark, path):
+    """Directories of every live segment of the index at ``path``."""
+    from etl_hiscox_spark.sources.genlog import live_index_paths
+
+    return live_index_paths(spark, path)
+
+
+def _ivf_rows(spark, path):
+    """Every live row of the IVF index at ``path``, across its segments."""
+    from etl_hiscox_spark.operators.similarity import _read_ivf_segments
+
+    return _read_ivf_segments(spark, _live_segments(spark, path))
+
+
+def _minhash_buckets(spark, path):
+    """The bucket table of every live segment of the minhash index."""
+    import os
+
+    return spark.read.parquet(
+        *[os.path.join(p, "buckets") for p in _live_segments(spark, path)]
+    )
+
+
 def _docs(spark):
     rows = [
         (0, BASE),
@@ -390,7 +413,7 @@ def test_minhash_index_roundtrip_probe(spark, tmp_path):
     old = spark.createDataFrame(old_rows, "doc_id long, text string")
     new = spark.createDataFrame(new_rows, "doc_id long, text string")
     path = str(tmp_path / "idx")
-    write_minhash_index(old, "text", "doc_id", path, num_hashes=24, num_bands=6, generational=False)
+    write_minhash_index(old, "text", "doc_id", path, num_hashes=24, num_bands=6)
 
     cand = probe_minhash_index(new, "text", "doc_id", path).collect()
     pairs = {(r["new_id"], r["dup_of"]) for r in cand}
@@ -411,7 +434,7 @@ def test_minhash_index_append_and_param_guard(spark, tmp_path):
     d1 = spark.createDataFrame([(1, "a b c d e f g h")], "doc_id long, text string")
     d2 = spark.createDataFrame([(2, "p q r s t u v w")], "doc_id long, text string")
     path = str(tmp_path / "idx")
-    write_minhash_index(d1, "text", "doc_id", path, num_hashes=24, num_bands=6, generational=False)
+    write_minhash_index(d1, "text", "doc_id", path, num_hashes=24, num_bands=6)
     # append with matching params extends the index
     write_minhash_index(d2, "text", "doc_id", path, num_hashes=24, num_bands=6, mode="append")
     probe = spark.createDataFrame([(9, "p q r s t u v w")], "doc_id long, text string")
@@ -434,7 +457,7 @@ def test_minhash_index_rejects_unbandable_width(spark, tmp_path):
 
     d = spark.createDataFrame([(1, "a b c d e f")], "doc_id long, text string")
     with _pytest.raises(ValueError, match="divisible"):
-        write_minhash_index(d, "text", "doc_id", str(tmp_path / "idx"), num_hashes=24, num_bands=5, generational=False)
+        write_minhash_index(d, "text", "doc_id", str(tmp_path / "idx"), num_hashes=24, num_bands=5)
 
 
 def test_probe_unresolved_candidates_surface_as_null(spark, tmp_path):
@@ -446,7 +469,7 @@ def test_probe_unresolved_candidates_surface_as_null(spark, tmp_path):
     old = spark.createDataFrame([(0, base)], "doc_id long, text string")
     new = spark.createDataFrame([(101, base)], "doc_id long, text string")
     path = str(tmp_path / "idx")
-    write_minhash_index(old, "text", "doc_id", path, generational=False)
+    write_minhash_index(old, "text", "doc_id", path)
     # verify_df resolves only the NEW side — the old doc's counts are missing
     out = probe_minhash_index(new, "text", "doc_id", path, verify_df=new, threshold=0.5).collect()
     assert [(r["new_id"], r["dup_of"], r["jaccard"]) for r in out] == [(101, 0, None)]
@@ -459,34 +482,43 @@ def test_probe_unresolved_candidates_surface_as_null(spark, tmp_path):
 
 
 def test_interrupted_index_overwrite_fails_loud(spark, tmp_path):
-    """Commit protocol (ADVICE r8): meta is invalidated BEFORE an
-    overwrite's bucket write and rewritten only after it succeeds, so a
-    failure in between leaves a meta-less index and every probe fails
-    LOUDLY — never a stale meta banding probes differently from the
-    buckets (which would silently return zero duplicates)."""
+    """Commit protocol (ADVICE r8): meta is each tree's commit record. An
+    overwrite that dies mid-flight never commits a pointer, so the
+    previous generation keeps answering; and a live tree that has lost
+    its meta makes every probe fail LOUDLY — never band a probe with
+    default parameters (which would silently return zero duplicates)."""
+    import os
+    import shutil
+
     import pytest as _pytest
 
     from etl_hiscox_spark.operators.dedup import (
         probe_minhash_index,
         write_minhash_index,
     )
+    from etl_hiscox_spark.sources import genlog
 
     base = "alpha beta gamma delta epsilon zeta eta theta"
     old = spark.createDataFrame([(0, base)], "doc_id long, text string")
     new = spark.createDataFrame([(1, base)], "doc_id long, text string")
     path = str(tmp_path / "idx")
-    write_minhash_index(old, "text", "doc_id", path, num_hashes=24, num_bands=6, generational=False)
+    write_minhash_index(old, "text", "doc_id", path, num_hashes=24, num_bands=6)
     assert probe_minhash_index(new, "text", "doc_id", path).count() == 1
 
-    # an overwrite that dies mid-flight: the signature build fails (bad
-    # column) AFTER the protocol has already invalidated the meta
+    # an overwrite that dies mid-flight (bad column): nothing commits
     with _pytest.raises(Exception):
-        write_minhash_index(old, "no_such_col", "doc_id", path, num_hashes=24, num_bands=6, generational=False)
+        write_minhash_index(old, "no_such_col", "doc_id", path, num_hashes=24, num_bands=6)
+    assert [g["operation"] for g in genlog.list_generations(spark, path)] == ["build"]
+    assert probe_minhash_index(new, "text", "doc_id", path).count() == 1
+
+    # a live tree without its commit record is rejected loudly
+    (live,) = _live_segments(spark, path)
+    shutil.rmtree(os.path.join(live, "meta"))
     with _pytest.raises(ValueError, match="no readable meta"):
         probe_minhash_index(new, "text", "doc_id", path)
 
     # recovery is a clean rebuild
-    write_minhash_index(old, "text", "doc_id", path, num_hashes=24, num_bands=6, generational=False)
+    write_minhash_index(old, "text", "doc_id", path, num_hashes=24, num_bands=6)
     assert probe_minhash_index(new, "text", "doc_id", path).count() == 1
 
 
@@ -513,7 +545,7 @@ def test_probe_with_verify_releases_owned_caches(spark, tmp_path):
         [(1, base.replace("kappa", "lambda"))], "doc_id long, text string"
     )
     path = str(tmp_path / "idx")
-    write_minhash_index(old, "text", "doc_id", path, generational=False)
+    write_minhash_index(old, "text", "doc_id", path)
 
     # id-SET comparison, not counts: the ContextCleaner may reap caches
     # an earlier test released with blocking=False at any moment, so an
@@ -613,6 +645,19 @@ def test_near_dedup_consumers_propagate_cache_ownership(spark):
         out.count()  # materialize with the stem caches alive
         assert release_caches(out) >= 1  # ownership propagated to the result
         assert release_caches(out) == 0  # idempotent
+
+
+def test_t33_leakage_safe_split_releases_owned_caches(spark, sf_dir):
+    """t33 persists its confirmed pair graph (two consumers) and composes
+    the Jaccard stem: both must ride the returned frame, or every call
+    leaks them for the life of the session."""
+    from etl_hiscox_spark.operators.caching import release_caches
+    from etl_hiscox_spark.queries.llm import t33_leakage_safe_split
+
+    out = t33_leakage_safe_split(spark, sf_dir)
+    out.collect()  # materialize with the caches alive
+    assert release_caches(out) >= 1
+    assert release_caches(out) == 0  # idempotent
 
 
 def test_incremental_probe_banding_recall_margin_pinned(spark):
@@ -886,8 +931,7 @@ def test_mmr_topk_generic_id_types(spark):
 
 
 def test_ivf_rebuild_clears_stale_partitions_under_dynamic_mode(spark, tmp_path):
-    """write_ivf_index's commit protocol requires the overwrite to clear
-    the WHOLE index path. Under the session config
+    """A rebuilt index must hold exactly the new corpus. Under the session config
     spark.sql.sources.partitionOverwriteMode=dynamic a plain overwrite
     only replaces partitions present in the new data, so a rebuild that
     lands in fewer clusters would leave stale cluster partitions (and
@@ -910,11 +954,11 @@ def test_ivf_rebuild_clears_stale_partitions_under_dynamic_mode(spark, tmp_path)
     old_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        write_ivf_index(big, path, "embedding", "vec_id", n_clusters=8, max_iter=2, generational=False)
+        write_ivf_index(big, path, "embedding", "vec_id", n_clusters=8, max_iter=2)
         # rebuild with a tiny corpus in fewer clusters — every old row and
         # every old cluster partition must be gone
-        write_ivf_index(small, path, "embedding", "vec_id", n_clusters=2, max_iter=2, generational=False)
-        back = spark.read.parquet(path)
+        write_ivf_index(small, path, "embedding", "vec_id", n_clusters=2, max_iter=2)
+        back = _ivf_rows(spark, path)
         ids = {r["vec_id"] for r in back.select("vec_id").collect()}
         assert ids == {100 + i for i in range(8)}, (
             f"stale rows survived the rebuild: {sorted(ids - set(range(100, 108)))[:5]}"
@@ -954,13 +998,13 @@ def test_ivf_append_assignment_matches_kmeans_predict(spark, tmp_path):
     old = df.filter(F.col("vec_id") < 60)
     new = df.filter(F.col("vec_id") >= 60)
     path = str(tmp_path / "ivf")
-    centroids = write_ivf_index(old, path, "embedding", "vec_id", n_clusters=4, seed=7, generational=False)
+    centroids = write_ivf_index(old, path, "embedding", "vec_id", n_clusters=4, seed=7)
     assert np.allclose(load_ivf_centroids(spark, path), centroids)
 
     append_to_ivf_index(new, path, "embedding", "vec_id")
     stored = {
         r["vec_id"]: r["__cluster"]
-        for r in spark.read.parquet(path).filter(F.col("vec_id") >= 60).collect()
+        for r in _ivf_rows(spark, path).filter(F.col("vec_id") >= 60).collect()
     }
     # the model the index was built from, applied to the SAME new vectors
     model = KMeans(k=4, seed=7, featuresCol="__v", predictionCol="__c").fit(
@@ -983,9 +1027,10 @@ def test_ivf_append_assignment_matches_kmeans_predict(spark, tmp_path):
     assert got == want_ids
 
     # interrupted write -> loud rejection
+    import os
     import shutil
 
-    shutil.rmtree(str(tmp_path / "ivf" / "_centroids"))
+    shutil.rmtree(os.path.join(_live_segments(spark, path)[0], "_centroids"))
     with _pytest.raises(ValueError, match="no readable centroids"):
         ivf_probe_topk(spark, path, None, "embedding", "vec_id", q, k=5)
 
@@ -1010,8 +1055,8 @@ def test_ivf_append_rejects_malformed_embeddings(spark, tmp_path):
         "vec_id long, embedding array<float>",
     )
     path = str(tmp_path / "ivf")
-    write_ivf_index(df, path, "embedding", "vec_id", n_clusters=2, seed=1, generational=False)
-    n0 = spark.read.parquet(path).count()
+    write_ivf_index(df, path, "embedding", "vec_id", n_clusters=2, seed=1)
+    n0 = _ivf_rows(spark, path).count()
 
     bad = spark.createDataFrame(
         [(100, [1.0, 2.0, 3.0, 4.0]), (101, None), (102, [1.0, 2.0])],
@@ -1019,7 +1064,7 @@ def test_ivf_append_rejects_malformed_embeddings(spark, tmp_path):
     )
     with _pytest.raises(ValueError, match="NULL, empty, NaN"):
         append_to_ivf_index(bad, path, "embedding", "vec_id")
-    assert spark.read.parquet(path).count() == n0  # nothing landed
+    assert _ivf_rows(spark, path).count() == n0  # nothing landed
 
 
 def test_write_ivf_index_explicit_centroids(spark, tmp_path):
@@ -1043,10 +1088,10 @@ def test_write_ivf_index_explicit_centroids(spark, tmp_path):
         "vec_id long, embedding array<float>",
     )
     path = str(tmp_path / "ivf")
-    out = write_ivf_index(df, path, "embedding", "vec_id", centroids=C, generational=False)
+    out = write_ivf_index(df, path, "embedding", "vec_id", centroids=C)
     assert np.allclose(out, C)
     assert np.allclose(load_ivf_centroids(spark, path), C)
-    back = {r["vec_id"]: r["__cluster"] for r in spark.read.parquet(path).collect()}
+    back = {r["vec_id"]: r["__cluster"] for r in _ivf_rows(spark, path).collect()}
     m = np.asarray([[float(x) for x in vecs[i]] for i in range(40)], dtype=np.float64)
     d = (m * m).sum(axis=1, keepdims=True) - 2.0 * (m @ C.T) + (C * C).sum(axis=1)
     expected = d.argmin(axis=1)
@@ -1056,12 +1101,12 @@ def test_write_ivf_index_explicit_centroids(spark, tmp_path):
         [(0, [1.0, 2.0]), (1, None)], "vec_id long, embedding array<float>"
     )
     with _pytest.raises(ValueError, match="NULL, empty, NaN"):
-        write_ivf_index(bad, str(tmp_path / "ivf_bad"), "embedding", "vec_id", centroids=C, generational=False)
+        write_ivf_index(bad, str(tmp_path / "ivf_bad"), "embedding", "vec_id", centroids=C)
 
 
 def test_compact_ivf_index_defragments_and_preserves_probe(spark, tmp_path):
     """K appends then compact => at most 1 file per cluster partition at
-    this scale, _centroids byte-identical, index CONTENT identical, and
+    this scale, centroids identical, index CONTENT identical, and
     probe results row-for-row identical (VERDICT r9 item 3)."""
     import os
 
@@ -1084,20 +1129,21 @@ def test_compact_ivf_index_defragments_and_preserves_probe(spark, tmp_path):
         )
 
     path = str(tmp_path / "ivf")
-    write_ivf_index(frame(range(40)), path, "embedding", "vec_id", n_clusters=4, max_iter=2, generational=False)
+    write_ivf_index(frame(range(40)), path, "embedding", "vec_id", n_clusters=4, max_iter=2)
     for k in range(3):
         append_to_ivf_index(frame(range(100 + 10 * k, 110 + 10 * k)), path, "embedding", "vec_id")
 
     def files_per_partition():
         out = {}
-        for entry in os.listdir(path):
-            if entry.startswith("__cluster="):
-                out[entry] = sum(
-                    1
-                    for root, _, files in os.walk(os.path.join(path, entry))
-                    for f in files
-                    if f.endswith(".parquet")
-                )
+        for seg in _live_segments(spark, path):
+            for entry in os.listdir(seg):
+                if entry.startswith("__cluster="):
+                    out[entry] = out.get(entry, 0) + sum(
+                        1
+                        for root, _, files in os.walk(os.path.join(seg, entry))
+                        for f in files
+                        if f.endswith(".parquet")
+                    )
         return out
 
     before_files = files_per_partition()
@@ -1105,7 +1151,7 @@ def test_compact_ivf_index_defragments_and_preserves_probe(spark, tmp_path):
     cent_before = load_ivf_centroids(spark, path)
     content_before = sorted(
         (r["vec_id"], r["__cluster"], tuple(r["embedding"]))
-        for r in spark.read.parquet(path).collect()
+        for r in _ivf_rows(spark, path).collect()
     )
     qv = [float(x) for x in rng.standard_normal(6)]
     # 9-dp rounding: the scoring matvec is per-Arrow-batch BLAS, and
@@ -1125,7 +1171,7 @@ def test_compact_ivf_index_defragments_and_preserves_probe(spark, tmp_path):
     assert np.array_equal(load_ivf_centroids(spark, path), cent_before)
     content_after = sorted(
         (r["vec_id"], r["__cluster"], tuple(r["embedding"]))
-        for r in spark.read.parquet(path).collect()
+        for r in _ivf_rows(spark, path).collect()
     )
     assert content_after == content_before
     probe_after = [
@@ -1149,7 +1195,7 @@ def test_compact_minhash_index_defragments_and_preserves_probe(spark, tmp_path):
 
     docs = _docs(spark)
     path = str(tmp_path / "mh")
-    write_minhash_index(docs.filter("doc_id IN (0, 1)"), "text", "doc_id", path, generational=False)
+    write_minhash_index(docs.filter("doc_id IN (0, 1)"), "text", "doc_id", path)
     write_minhash_index(
         docs.filter("doc_id IN (2, 3)"), "text", "doc_id", path, mode="append"
     )
@@ -1160,14 +1206,15 @@ def test_compact_minhash_index_defragments_and_preserves_probe(spark, tmp_path):
     def bucket_files():
         return sum(
             1
-            for root, _, files in os.walk(os.path.join(path, "buckets"))
+            for seg in _live_segments(spark, path)
+            for root, _, files in os.walk(os.path.join(seg, "buckets"))
             for f in files
             if f.endswith(".parquet")
         )
 
     assert bucket_files() > 1, "appends did not fragment the bucket table"
     content_before = sorted(
-        tuple(r) for r in spark.read.parquet(os.path.join(path, "buckets")).collect()
+        tuple(r) for r in _minhash_buckets(spark, path).collect()
     )
     new_batch = docs.filter("doc_id = 5")
     probe_before = sorted(
@@ -1179,7 +1226,7 @@ def test_compact_minhash_index_defragments_and_preserves_probe(spark, tmp_path):
     n = compact_minhash_index(spark, path)
     assert n == 1 == bucket_files()
     content_after = sorted(
-        tuple(r) for r in spark.read.parquet(os.path.join(path, "buckets")).collect()
+        tuple(r) for r in _minhash_buckets(spark, path).collect()
     )
     assert content_after == content_before
     probe_after = sorted(
@@ -1214,7 +1261,7 @@ def test_ivf_centroid_drift_detects_planted_drift(spark, tmp_path):
         )
 
     path = str(tmp_path / "ivf")
-    write_ivf_index(frame(base, 0), path, "embedding", "vec_id", centroids=C, generational=False)
+    write_ivf_index(frame(base, 0), path, "embedding", "vec_id", centroids=C)
 
     def expected_stats(mat32):
         m = np.asarray(mat32, dtype=np.float64)
@@ -1340,13 +1387,15 @@ def test_ivf_recall_pinned_on_clustered_embeddings(spark):
 
 def test_erase_from_ivf_index_touches_only_affected_partitions(spark, tmp_path):
     """GDPR erasure inside the IVF layout: erased ids gone, count right,
-    UNAFFECTED partition files byte-identical (same paths+sizes —
-    erasure cost scales with the erase set's cluster footprint), a
-    fully-erased cluster's directory disappears, zero-match erase is a
-    no-op returning 0, and _centroids never move."""
+    UNAFFECTED partitions' rows identical (only the erase set's clusters
+    change), a fully-erased cluster's directory disappears from the live
+    generation, zero-match erase is a no-op returning 0 that commits
+    nothing, and the centroids never move."""
     import os
 
     import numpy as np
+
+    from etl_hiscox_spark.sources import genlog
 
     from etl_hiscox_spark.operators.similarity import (
         erase_from_ivf_index,
@@ -1365,17 +1414,15 @@ def test_erase_from_ivf_index_touches_only_affected_partitions(spark, tmp_path):
         rows.append((i, [float(x) for x in C[c] + 0.1 * rng.standard_normal(4)]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     path = str(tmp_path / "ivf")
-    write_ivf_index(df, path, "embedding", "vec_id", centroids=C, generational=False)
+    write_ivf_index(df, path, "embedding", "vec_id", centroids=C)
 
     def listing(cluster):
-        d = os.path.join(path, f"__cluster={cluster}")
-        if not os.path.isdir(d):
+        (live,) = _live_segments(spark, path)
+        if not os.path.isdir(os.path.join(live, f"__cluster={cluster}")):
             return None
         return sorted(
-            (f, os.path.getsize(os.path.join(r, f)))
-            for r, _, fs in os.walk(d)
-            for f in fs
-            if f.endswith(".parquet")
+            (r["vec_id"], tuple(r["embedding"]))
+            for r in _ivf_rows(spark, path).filter(F.col("__cluster") == cluster).collect()
         )
 
     l0, l1 = listing(0), listing(1)
@@ -1384,13 +1431,15 @@ def test_erase_from_ivf_index_touches_only_affected_partitions(spark, tmp_path):
     # erase 5 ids from cluster 2 plus the WHOLE of nothing else
     keys = spark.createDataFrame([(i,) for i in range(40, 45)], "vec_id long")
     assert erase_from_ivf_index(spark, path, keys, "vec_id") == 5
-    assert listing(0) == l0 and listing(1) == l1, "unaffected partitions rewritten"
-    back = {r["vec_id"] for r in spark.read.parquet(path).collect()}
+    assert listing(0) == l0 and listing(1) == l1, "unaffected partitions changed"
+    back = {r["vec_id"] for r in _ivf_rows(spark, path).collect()}
     assert back == set(range(40)) | set(range(45, 50))
 
     # zero-match erase: no-op
     ghost = spark.createDataFrame([(999,)], "vec_id long")
+    head = genlog.current_generation(spark, path)
     assert erase_from_ivf_index(spark, path, ghost, "vec_id") == 0
+    assert genlog.current_generation(spark, path) == head
     assert listing(0) == l0 and listing(1) == l1
 
     # erase the REST of cluster 2: its directory disappears, probes still work
@@ -1408,8 +1457,6 @@ def test_erase_from_minhash_index_removes_fingerprints(spark, tmp_path):
     """Erased docs stop surfacing as dup_of; bucket-row count contract
     (num_bands per indexed doc); meta (banding params) survives the
     rewrite; zero-match erase is a no-op."""
-    import os
-
     from etl_hiscox_spark.operators.dedup import (
         _read_index_meta,
         erase_from_minhash_index,
@@ -1422,7 +1469,7 @@ def test_erase_from_minhash_index_removes_fingerprints(spark, tmp_path):
     # index docs 0,1,2 (0 and 1 exact dups; 2 a near dup); probe with 5
     write_minhash_index(
         docs.filter("doc_id IN (0, 1, 2)"), "text", "doc_id", path,
-        num_hashes=24, num_bands=6, generational=False,
+        num_hashes=24, num_bands=6,
     )
     new = docs.filter("doc_id = 5")
     before = {r["dup_of"] for r in probe_minhash_index(new, "text", "doc_id", path).collect()}
@@ -1434,7 +1481,7 @@ def test_erase_from_minhash_index_removes_fingerprints(spark, tmp_path):
     after = {r["dup_of"] for r in probe_minhash_index(new, "text", "doc_id", path).collect()}
     assert 1 not in after, "erased doc still surfaces as dup_of"
     assert after == before - {1}
-    remaining = spark.read.parquet(os.path.join(path, "buckets"))
+    remaining = _minhash_buckets(spark, path)
     assert remaining.filter("doc = 1").count() == 0
 
     ghost = spark.createDataFrame([(42,)], "doc_id long")
@@ -1466,23 +1513,25 @@ def test_ivf_fragmentation_stats_tracks_appends_and_compaction(spark, tmp_path):
         )
 
     path = str(tmp_path / "ivf")
-    write_ivf_index(frame(range(30)), path, "embedding", "vec_id", n_clusters=3, max_iter=2, generational=False)
+    write_ivf_index(frame(range(30)), path, "embedding", "vec_id", n_clusters=3, max_iter=2)
     append_to_ivf_index(frame(range(100, 120)), path, "embedding", "vec_id")
 
     def disk_truth():
-        out = {}
-        for entry in os.listdir(path):
-            if not entry.startswith("__cluster="):
-                continue
-            c = int(entry.split("=", 1)[1])
-            files = [
-                os.path.join(r, f)
-                for r, _, fs in os.walk(os.path.join(path, entry))
-                for f in fs
-                if f.endswith(".parquet")
-            ]
-            out[c] = (len(files), sum(os.path.getsize(f) for f in files))
-        return out
+        files_by_cluster = {}
+        for seg in _live_segments(spark, path):
+            for entry in os.listdir(seg):
+                if not entry.startswith("__cluster="):
+                    continue
+                files_by_cluster.setdefault(int(entry.split("=", 1)[1]), []).extend(
+                    os.path.join(r, f)
+                    for r, _, fs in os.walk(os.path.join(seg, entry))
+                    for f in fs
+                    if f.endswith(".parquet")
+                )
+        return {
+            c: (len(files), sum(os.path.getsize(f) for f in files))
+            for c, files in files_by_cluster.items()
+        }
 
     stats = {
         r["cluster"]: (r["n_files"], r["total_bytes"])
@@ -1501,36 +1550,24 @@ def test_ivf_fragmentation_stats_tracks_appends_and_compaction(spark, tmp_path):
 
 
 def test_index_maintenance_rejects_remote_paths(spark):
-    """ADVICE r10: compact/erase swap files with os.rename — an index on
-    a remote scheme must be rejected LOUDLY up front, before any Spark
-    tmp write runs (the old failure mode was an opaque OSError after the
-    rewrite, leaking the tmp dir)."""
+    """ADVICE r10: the one index op left that moves directories with
+    os.rename — the legacy flat-to-generational migration — must reject
+    a remote root LOUDLY up front, before it touches any filesystem.
+    (Every other maintenance op commits by pointer flip and runs on any
+    filesystem.)"""
     import pytest
 
-    from etl_hiscox_spark.operators.dedup import (
-        compact_minhash_index,
-        erase_from_minhash_index,
-    )
-    from etl_hiscox_spark.operators.similarity import (
-        compact_ivf_index,
-        erase_from_ivf_index,
-    )
+    from etl_hiscox_spark.operators.dedup import migrate_flat_index_to_generational
 
-    keys = spark.createDataFrame([(1,)], "doc_id long")
-    for op in (
-        lambda: compact_ivf_index(spark, "s3a://bucket/ivf"),
-        lambda: erase_from_ivf_index(spark, "s3a://bucket/ivf", keys, "doc_id"),
-        lambda: compact_minhash_index(spark, "hdfs://nn/idx"),
-        lambda: erase_from_minhash_index(spark, "hdfs://nn/idx", keys, "doc_id"),
-    ):
+    for root in ("s3a://bucket/ivf", "hdfs://nn/idx"):
         with pytest.raises(ValueError, match="driver-local"):
-            op()
+            migrate_flat_index_to_generational(spark, root)
 
 
 def test_index_maintenance_accepts_file_scheme_paths(spark, tmp_path):
     """ADVICE r10: an index built and probed on a file://-prefixed path
     must survive the full maintenance lifecycle (compact + erase) — the
-    os-level legs strip the scheme, the Spark legs keep it."""
+    pointer-log legs resolve the scheme, the Spark legs keep it."""
     import os
 
     from etl_hiscox_spark.operators.dedup import (
@@ -1549,7 +1586,7 @@ def test_index_maintenance_accepts_file_scheme_paths(spark, tmp_path):
 
     docs = _docs(spark)
     mh_path = "file://" + str(tmp_path / "mh")
-    write_minhash_index(docs.filter("doc_id IN (0, 1, 2)"), "text", "doc_id", mh_path, generational=False)
+    write_minhash_index(docs.filter("doc_id IN (0, 1, 2)"), "text", "doc_id", mh_path)
     write_minhash_index(
         docs.filter("doc_id = 4"), "text", "doc_id", mh_path, mode="append"
     )
@@ -1559,7 +1596,9 @@ def test_index_maintenance_accepts_file_scheme_paths(spark, tmp_path):
     new = docs.filter("doc_id = 5")
     dups = {r["dup_of"] for r in probe_minhash_index(new, "text", "doc_id", mh_path).collect()}
     assert 0 in dups and 1 not in dups
-    assert os.path.isdir(str(tmp_path / "mh" / "meta"))
+    (live,) = _live_segments(spark, mh_path)
+    assert live.startswith("file://")
+    assert os.path.isdir(os.path.join(live[len("file://"):], "meta"))
 
     rng = np.random.default_rng(17)
     emb = spark.createDataFrame(
@@ -1569,7 +1608,7 @@ def test_index_maintenance_accepts_file_scheme_paths(spark, tmp_path):
     ivf_path = "file://" + str(tmp_path / "ivf")
     write_ivf_index(
         emb.filter("vec_id < 20"), ivf_path, "embedding", "vec_id",
-        n_clusters=3, max_iter=2, generational=False,
+        n_clusters=3, max_iter=2,
     )
     append_to_ivf_index(emb.filter("vec_id >= 20"), ivf_path, "embedding", "vec_id")
     assert compact_ivf_index(spark, ivf_path) >= 1
@@ -1581,59 +1620,6 @@ def test_index_maintenance_accepts_file_scheme_paths(spark, tmp_path):
     )
     ids = {r["vec_id"] for r in got.collect()}
     assert len(ids) == 38 and 7 not in ids and 23 not in ids
-
-
-def test_interrupted_minhash_maintenance_is_recoverable(spark, tmp_path, monkeypatch):
-    """ADVICE r10: a crash mid-compaction must leave the banding
-    parameters ON DISK (meta renamed aside, not deleted) — probes fail
-    loudly while the crash window is open, and renaming the aside back
-    restores the index without a rebuild."""
-    import os
-
-    import pytest
-
-    from etl_hiscox_spark.operators import dedup
-    from etl_hiscox_spark.sources import writers
-
-    docs = _docs(spark)
-    path = str(tmp_path / "mh")
-    dedup.write_minhash_index(docs.filter("doc_id IN (0, 1)"), "text", "doc_id", path, generational=False)
-    dedup.write_minhash_index(
-        docs.filter("doc_id = 2"), "text", "doc_id", path, mode="append"
-    )
-    new = docs.filter("doc_id = 5")
-    before = {
-        r["dup_of"]
-        for r in dedup.probe_minhash_index(new, "text", "doc_id", path).collect()
-    }
-
-    def boom(*a, **k):
-        raise RuntimeError("simulated crash mid-rewrite")
-
-    monkeypatch.setattr(writers, "compact_small_files", boom)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        dedup.compact_minhash_index(spark, path)
-    monkeypatch.undo()
-
-    # crash window: meta gone (probes reject loudly), params recoverable
-    assert not os.path.exists(os.path.join(path, "meta"))
-    assert os.path.isdir(os.path.join(path, "meta__compact"))
-    with pytest.raises(ValueError, match="no readable meta"):
-        dedup.probe_minhash_index(new, "text", "doc_id", path).collect()
-    # a second maintenance attempt must not clobber the aside copy
-    with pytest.raises(ValueError, match="leftover"):
-        dedup._rename_meta_aside(spark, path, "meta__compact")
-
-    # recovery = rename back; the index probes identically, no rebuild
-    os.rename(os.path.join(path, "meta__compact"), os.path.join(path, "meta"))
-    after = {
-        r["dup_of"]
-        for r in dedup.probe_minhash_index(new, "text", "doc_id", path).collect()
-    }
-    assert after == before
-    assert dedup._read_index_meta(spark, path) == (24, 6, 3)
-    # and the real compaction still works post-recovery
-    assert dedup.compact_minhash_index(spark, path) == 1
 
 
 def _clustered_frame(spark, rng, centers, ids):
@@ -1669,7 +1655,7 @@ def test_rebuild_ivf_index_drops_drift_below_trigger(spark, tmp_path):
                  ([-5, -5, 0, 0], [0, 0, -5, -5], [-5, 0, 0, -5])]
     path = str(tmp_path / "ivf")
     base = _clustered_frame(spark, rng, centers_a, range(60))
-    write_ivf_index(base, path, "embedding", "vec_id", n_clusters=3, max_iter=8, generational=False)
+    write_ivf_index(base, path, "embedding", "vec_id", n_clusters=3, max_iter=8)
     batch = _clustered_frame(spark, rng, centers_b, range(100, 140))
     append_to_ivf_index(batch, path, "embedding", "vec_id")
 
@@ -1685,14 +1671,14 @@ def test_rebuild_ivf_index_drops_drift_below_trigger(spark, tmp_path):
 
     payload_before = sorted(
         (r["vec_id"], tuple(round(float(x), 6) for x in r["embedding"]))
-        for r in spark.read.parquet(path).select("vec_id", "embedding").collect()
+        for r in _ivf_rows(spark, path).select("vec_id", "embedding").collect()
     )
     C = rebuild_ivf_index(spark, path, "embedding", "vec_id", max_iter=8)
     assert C.shape == (3, 4)
     np.testing.assert_allclose(load_ivf_centroids(spark, path), C)
     payload_after = sorted(
         (r["vec_id"], tuple(round(float(x), 6) for x in r["embedding"]))
-        for r in spark.read.parquet(path).select("vec_id", "embedding").collect()
+        for r in _ivf_rows(spark, path).select("vec_id", "embedding").collect()
     )
     assert payload_after == payload_before
     assert drift_ratio() <= 1.25, "rebuild did not absorb the drifted batch"
@@ -1709,14 +1695,16 @@ def test_rebuild_ivf_index_drops_drift_below_trigger(spark, tmp_path):
 
 def test_rebuild_ivf_index_commit_protocol(spark, tmp_path, monkeypatch):
     """A crash while staging leaves the LIVE index untouched and probing
-    identically; the leftover staging dir makes the next rebuild fail
-    loudly until recovered; n_clusters can change across a rebuild."""
+    identically (no pointer commits); the orphaned stage is
+    vacuum-reclaimable and never blocks the next rebuild; n_clusters can
+    change across a rebuild."""
     import os
 
     import numpy as np
     import pytest
 
     from etl_hiscox_spark.operators import similarity as sim
+    from etl_hiscox_spark.sources import genlog
 
     rng = np.random.default_rng(29)
     emb = spark.createDataFrame(
@@ -1724,7 +1712,7 @@ def test_rebuild_ivf_index_commit_protocol(spark, tmp_path, monkeypatch):
         "vec_id long, embedding array<float>",
     )
     path = str(tmp_path / "ivf")
-    sim.write_ivf_index(emb, path, "embedding", "vec_id", n_clusters=4, max_iter=2, generational=False)
+    sim.write_ivf_index(emb, path, "embedding", "vec_id", n_clusters=4, max_iter=2)
     qvec = [float(x) for x in rng.standard_normal(4)]
     before = [
         (r["vec_id"], round(r["cosine_sim"], 9))
@@ -1753,20 +1741,16 @@ def test_rebuild_ivf_index_commit_protocol(spark, tmp_path, monkeypatch):
         ).collect()
     ]
     assert after_crash == before
-    # leftover staging dir -> loud rejection until the operator recovers
-    assert os.path.isdir(path + "__rebuild")
-    with pytest.raises(ValueError, match="leftover"):
-        sim.rebuild_ivf_index(spark, path, "embedding", "vec_id")
-    import shutil
+    assert [g["operation"] for g in genlog.list_generations(spark, path)] == ["build"]
+    # the crashed stage is an orphan: a 0-window vacuum reclaims it
+    assert genlog.vacuum_generations(spark, path, min_age_seconds=0) == 1
 
-    shutil.rmtree(path + "__rebuild")
-
-    # recovery done: rebuild with a DIFFERENT cluster count
+    # rebuild with a DIFFERENT cluster count commits normally
     C = sim.rebuild_ivf_index(spark, path, "embedding", "vec_id", n_clusters=6, max_iter=2)
     assert C.shape == (6, 4)
-    parts = {e for e in os.listdir(path) if e.startswith("__cluster=")}
+    (live,) = _live_segments(spark, path)
+    parts = {e for e in os.listdir(live) if e.startswith("__cluster=")}
     assert parts and all(int(p.split("=")[1]) in range(6) for p in parts)
-    assert not os.path.exists(path + "__old")
     final = sim.ivf_probe_topk(
         spark, path, None, "embedding", "vec_id", qvec, k=40, n_probe=6
     )
@@ -1793,7 +1777,7 @@ def test_minhash_fragmentation_stats_tracks_appends_and_compaction(spark, tmp_pa
     with pytest.raises(ValueError, match="no readable meta"):
         minhash_fragmentation_stats(spark, path).collect()
 
-    write_minhash_index(docs.filter("doc_id IN (0, 1)"), "text", "doc_id", path, generational=False)
+    write_minhash_index(docs.filter("doc_id IN (0, 1)"), "text", "doc_id", path)
     write_minhash_index(
         docs.filter("doc_id IN (2, 3)"), "text", "doc_id", path, mode="append"
     )
@@ -1804,7 +1788,8 @@ def test_minhash_fragmentation_stats_tracks_appends_and_compaction(spark, tmp_pa
     def disk_truth():
         files = [
             os.path.join(r, f)
-            for r, _, fs in os.walk(os.path.join(path, "buckets"))
+            for seg in _live_segments(spark, path)
+            for r, _, fs in os.walk(os.path.join(seg, "buckets"))
             for f in fs
             if f.endswith(".parquet")
         ]
@@ -1845,13 +1830,13 @@ def test_quantized_ivf_layout_probe_matches_quantized_topk(spark, tmp_path):
     path = str(tmp_path / "ivf")
     write_ivf_index(
         emb.filter("vec_id < 50"), path, "embedding", "vec_id",
-        n_clusters=4, max_iter=2, quantize=True, generational=False,
+        n_clusters=4, max_iter=2, quantize=True,
     )
-    cols = set(spark.read.parquet(path).columns)
+    cols = set(_ivf_rows(spark, path).columns)
     assert {"__codes", "__qscale", "__cluster"} <= cols
     # append into the quantized layout: codes must materialize for the batch
     append_to_ivf_index(emb.filter("vec_id >= 50"), path, "embedding", "vec_id")
-    appended = spark.read.parquet(path).filter("vec_id >= 50")
+    appended = _ivf_rows(spark, path).filter("vec_id >= 50")
     assert appended.count() == 30
     assert appended.filter(F.col("__codes").isNull()).count() == 0
 
@@ -1876,7 +1861,7 @@ def test_quantized_ivf_layout_probe_matches_quantized_topk(spark, tmp_path):
 
     plain = str(tmp_path / "plain")
     write_ivf_index(
-        emb, plain, "embedding", "vec_id", n_clusters=2, max_iter=2, generational=False
+        emb, plain, "embedding", "vec_id", n_clusters=2, max_iter=2
     )
     with pytest.raises(ValueError, match="__codes"):
         ivf_probe_topk_quantized(spark, plain, "embedding", "vec_id", qvec)
@@ -1895,10 +1880,11 @@ def test_quantized_ivf_stage1_scan_prunes_embedding_column(spark, tmp_path):
     )
     path = str(tmp_path / "ivf")
     write_ivf_index(emb, path, "embedding", "vec_id", n_clusters=4, max_iter=2,
-                    quantize=True, generational=False)
+                    quantize=True)
     # the probe's stage-1 frame, reconstructed for explain (the operator
     # collects the shortlist eagerly, so gate the plan on its exact shape)
-    idx = spark.read.parquet(path)
+    (live,) = _live_segments(spark, path)
+    idx = spark.read.parquet(live)
     stage1 = idx.filter(F.col("__cluster").isin([0, 1])).select("vec_id", "__codes")
     plan = stage1._sc is not None and stage1._jdf.queryExecution().executedPlan().toString()
     scan = [ln for ln in plan.splitlines() if "FileScan" in ln]
@@ -1914,7 +1900,7 @@ def test_quantized_layout_survives_maintenance_lifecycle(spark, tmp_path):
     before it landed: compact and erase rewrite partitions from the live
     rows (codes are data columns), rebuild re-quantizes under the new
     geometry, and the commit record's quantized flag rides each op's
-    rename-aside protocol — so the codes-only probe stays exact over the
+    pointer-flip commit — so the codes-only probe stays exact over the
     surviving corpus after compact -> erase -> rebuild."""
     from etl_hiscox_spark.operators.similarity import (
         append_to_ivf_index,
@@ -1935,7 +1921,7 @@ def test_quantized_layout_survives_maintenance_lifecycle(spark, tmp_path):
     path = str(tmp_path / "ivf_q")
     write_ivf_index(
         emb.filter("vec_id < 60"), path, "embedding", "vec_id",
-        n_clusters=3, max_iter=2, quantize=True, generational=False,
+        n_clusters=3, max_iter=2, quantize=True,
     )
     append_to_ivf_index(emb.filter("vec_id >= 60"), path, "embedding", "vec_id")
 
@@ -1944,7 +1930,7 @@ def test_quantized_layout_survives_maintenance_lifecycle(spark, tmp_path):
             (r["vec_id"], round(r["approx_cos"], 9), round(r["exact_cos"], 9), r["rank"])
             for r in ivf_probe_topk_quantized(
                 spark, path, "embedding", "vec_id", qvec, k=8,
-                n_probe=spark.read.parquet(path).select("__cluster").distinct().count(),
+                n_probe=_ivf_rows(spark, path).select("__cluster").distinct().count(),
                 rerank_factor=3,
             ).collect()
         ]
@@ -1960,7 +1946,7 @@ def test_quantized_layout_survives_maintenance_lifecycle(spark, tmp_path):
 
     compact_ivf_index(spark, path, target_file_mb=256)
     assert ivf_index_is_quantized(spark, path)
-    live = spark.read.parquet(path)
+    live = _ivf_rows(spark, path)
     assert live.filter(F.col("__codes").isNull()).count() == 0
     probe_pairs(emb, qvec)
 
@@ -1974,19 +1960,16 @@ def test_quantized_layout_survives_maintenance_lifecycle(spark, tmp_path):
 
     rebuild_ivf_index(spark, path, "embedding", "vec_id", n_clusters=4, max_iter=2)
     assert ivf_index_is_quantized(spark, path)
-    rebuilt = spark.read.parquet(path)
+    rebuilt = _ivf_rows(spark, path)
     assert rebuilt.filter(F.col("__codes").isNull()).count() == 0
     probe_pairs(survivors, qvec)
 
 
 def test_rebuild_minhash_index_rebands_live_index(spark, tmp_path):
-    """rebuild_minhash_index (r11): parameter migration under the
-    rename-aside protocol — new banding lands atomically, probes/appends
-    validate against the NEW meta, the supplied corpus defines exactly
-    what stays indexed (fingerprint refresh), and crash leftovers are
-    rejected loudly."""
-    import os
-
+    """rebuild_minhash_index (r11): parameter migration committed by one
+    pointer flip — new banding lands atomically, probes/appends validate
+    against the NEW meta, and the supplied corpus defines exactly what
+    stays indexed (fingerprint refresh)."""
     import pytest
 
     from etl_hiscox_spark.operators.dedup import (
@@ -2006,7 +1989,7 @@ def test_rebuild_minhash_index_rebands_live_index(spark, tmp_path):
         [(101, base.replace("kappa", "lambda"))], "doc_id long, text string"
     )
     path = str(tmp_path / "idx")
-    write_minhash_index(corpus, "text", "doc_id", path, num_hashes=24, num_bands=6, generational=False)
+    write_minhash_index(corpus, "text", "doc_id", path, num_hashes=24, num_bands=6)
     assert {(r["new_id"], r["dup_of"])
             for r in probe_minhash_index(probe, "text", "doc_id", path).collect()
             } == {(101, 0)}
@@ -2035,201 +2018,22 @@ def test_rebuild_minhash_index_rebands_live_index(spark, tmp_path):
         )
 
     # None parameters keep the live meta; supplying a REDUCED corpus is
-    # the fingerprint refresh — doc 0 leaves the index in the same swap
+    # the fingerprint refresh — doc 0 leaves the index in the same commit
     rebuild_minhash_index(
         spark, corpus.filter("doc_id != 0"), "text", "doc_id", path
     )
     assert _read_index_meta(spark, path) == (32, 8, 3)
     assert probe_minhash_index(probe, "text", "doc_id", path).count() == 0
-    buckets = spark.read.parquet(os.path.join(path, "buckets"))
+    buckets = _minhash_buckets(spark, path)
     assert buckets.filter("doc = 0").count() == 0
     assert buckets.filter("doc = 7").count() == 0  # exactly df, appends excluded
 
-    # divisibility guard fires before anything is staged or renamed
+    # divisibility guard fires before anything is staged or committed
     with pytest.raises(ValueError, match="divisible"):
         rebuild_minhash_index(
             spark, corpus, "text", "doc_id", path, num_hashes=32, num_bands=5
         )
     assert _read_index_meta(spark, path) == (32, 8, 3)
-
-    # crash leftovers are rejected loudly, live index untouched
-    os.mkdir(path + "__rebuild")
-    with pytest.raises(ValueError, match="leftover"):
-        rebuild_minhash_index(spark, corpus, "text", "doc_id", path)
-    os.rmdir(path + "__rebuild")
-    assert _read_index_meta(spark, path) == (32, 8, 3)
-
-
-# ---------------------------------------------------------------------------
-# recover_staged_rebuild (VERDICT r11 item 4): each crash window of the
-# staged-rebuild commit protocol must recover to a valid live index whose
-# probe answers are correct.
-# ---------------------------------------------------------------------------
-
-
-def _mh_corpus(spark):
-    rows = [(i, f"shared filler text body number {i} common tokens run") for i in range(30)]
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def _mh_index(spark, tmp_path, name="mh"):
-    from etl_hiscox_spark.operators.dedup import write_minhash_index
-
-    path = str(tmp_path / name)
-    docs = _mh_corpus(spark)
-    write_minhash_index(docs, "text", "doc_id", path, num_hashes=24, num_bands=6, generational=False)
-    return path, docs
-
-
-def _mh_probe_ok(spark, path, docs):
-    from etl_hiscox_spark.operators.dedup import probe_minhash_index
-
-    probe = spark.createDataFrame(
-        [(100, "shared filler text body number 3 common tokens run")],
-        "doc_id long, text string",
-    )
-    out = probe_minhash_index(probe, "text", "doc_id", path)
-    assert out.count() >= 1  # exact duplicate of doc 3 must be found
-
-
-def test_recover_staged_rebuild_noop_and_empty(spark, tmp_path):
-    import pytest
-
-    from etl_hiscox_spark.operators.dedup import recover_staged_rebuild
-
-    path, docs = _mh_index(spark, tmp_path)
-    assert recover_staged_rebuild(spark, path) == "none"
-    _mh_probe_ok(spark, path, docs)
-    with pytest.raises(ValueError, match="nothing to recover"):
-        recover_staged_rebuild(spark, str(tmp_path / "absent"))
-
-
-def test_recover_staged_rebuild_after_stage_rolls_back(spark, tmp_path):
-    """Crash window 1: stage written (possibly incomplete), commit never
-    began — live untouched, stage removed, live still answers probes."""
-    import os
-
-    from etl_hiscox_spark.operators.dedup import (
-        _read_index_meta,
-        recover_staged_rebuild,
-        write_minhash_index,
-    )
-
-    path, docs = _mh_index(spark, tmp_path)
-    # simulate: a complete stage AND an incomplete one (meta missing)
-    write_minhash_index(docs, "text", "doc_id", path + "__rebuild",
-                        num_hashes=32, num_bands=8, generational=False)
-    assert recover_staged_rebuild(spark, path) == "rolled_back_stage"
-    assert not os.path.exists(path + "__rebuild")
-    assert _read_index_meta(spark, path) == (24, 6, 3)  # old params live
-    _mh_probe_ok(spark, path, docs)
-    # idempotent: a second recovery is a no-op
-    assert recover_staged_rebuild(spark, path) == "none"
-
-
-def test_recover_staged_rebuild_between_renames_completes(spark, tmp_path):
-    """Crash window 2: live renamed to __old, stage not yet promoted —
-    recovery promotes the (complete by protocol) stage."""
-    import os
-
-    from etl_hiscox_spark.operators.dedup import (
-        _read_index_meta,
-        recover_staged_rebuild,
-        write_minhash_index,
-    )
-
-    path, docs = _mh_index(spark, tmp_path)
-    write_minhash_index(docs, "text", "doc_id", path + "__rebuild",
-                        num_hashes=32, num_bands=8, generational=False)
-    os.rename(path, path + "__old")  # first rename landed, then crash
-    assert recover_staged_rebuild(spark, path) == "completed_swap"
-    assert not os.path.exists(path + "__old")
-    assert _read_index_meta(spark, path) == (32, 8, 3)  # migrated params live
-    _mh_probe_ok(spark, path, docs)
-
-
-def test_recover_staged_rebuild_before_old_cleanup(spark, tmp_path):
-    """Crash window 3: swap landed, __old not yet removed."""
-    import os
-    import shutil
-
-    from etl_hiscox_spark.operators.dedup import recover_staged_rebuild
-
-    path, docs = _mh_index(spark, tmp_path)
-    shutil.copytree(path, path + "__old")
-    assert recover_staged_rebuild(spark, path) == "removed_old"
-    assert not os.path.exists(path + "__old")
-    _mh_probe_ok(spark, path, docs)
-
-
-def test_recover_staged_rebuild_old_only_restores(spark, tmp_path):
-    import os
-
-    from etl_hiscox_spark.operators.dedup import recover_staged_rebuild
-
-    path, docs = _mh_index(spark, tmp_path)
-    os.rename(path, path + "__old")
-    assert recover_staged_rebuild(spark, path) == "restored_old"
-    _mh_probe_ok(spark, path, docs)
-
-
-def test_recover_staged_rebuild_refuses_unreachable_states(spark, tmp_path):
-    import shutil
-
-    import pytest
-
-    from etl_hiscox_spark.operators.dedup import recover_staged_rebuild
-
-    path, docs = _mh_index(spark, tmp_path)
-    shutil.copytree(path, path + "__rebuild")
-    shutil.copytree(path, path + "__old")
-    with pytest.raises(ValueError, match="unreachable"):
-        recover_staged_rebuild(spark, path)
-    shutil.rmtree(path + "__old")
-    shutil.rmtree(path + "__rebuild")
-    # stage only (no live): refuse to promote
-    stage_only = str(tmp_path / "stage_only")
-    shutil.copytree(path, stage_only + "__rebuild")
-    with pytest.raises(ValueError, match="ONLY a __rebuild"):
-        recover_staged_rebuild(spark, stage_only)
-
-
-def test_recover_staged_rebuild_ivf_layout(spark, tmp_path):
-    """The same recovery drives the IVF layout: crash between the two
-    renames completes to the retrained index and the probe matches
-    brute force."""
-    import os
-
-    import numpy as np
-
-    from etl_hiscox_spark.operators.dedup import recover_staged_rebuild
-    from etl_hiscox_spark.operators.similarity import (
-        cosine_topk,
-        ivf_probe_topk,
-        load_ivf_centroids,
-        random_hyperplanes,
-        write_ivf_index,
-    )
-
-    rng = np.random.default_rng(11)
-    rows = [(i, [float(x) for x in rng.standard_normal(8)]) for i in range(60)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    path = str(tmp_path / "ivf")
-    planes = random_hyperplanes(dim=8, n_planes=4, seed=3)
-    write_ivf_index(emb, path, "embedding", "vec_id", centroids=planes, generational=False)
-    # stage a complete retrained index, then crash between the renames
-    write_ivf_index(emb, path + "__rebuild", "embedding", "vec_id",
-                    n_clusters=4, seed=5, max_iter=3, generational=False)
-    os.rename(path, path + "__old")
-    assert recover_staged_rebuild(spark, path) == "completed_swap"
-    C = load_ivf_centroids(spark, path)
-    assert not np.allclose(C, planes)  # the retrained geometry is live
-    q = rows[0][1]
-    got = ivf_probe_topk(spark, path, None, "embedding", "vec_id", q, k=5, n_probe=4)
-    want = cosine_topk(emb, "embedding", "vec_id", q, k=5)
-    assert [r["vec_id"] for r in got.collect()] == [
-        r["vec_id"] for r in want.collect()
-    ]
 
 
 def test_segment_hit_stats_one_action(spark):
@@ -2269,7 +2073,7 @@ def test_staged_build_observed_gate_leaves_centroidless_stage(spark, tmp_path):
     )
     path = str(tmp_path / "ivf_gen_bad")
     with _pytest.raises(ValueError, match="NULL, empty, NaN"):
-        write_ivf_index(bad, path, "embedding", "vec_id", centroids=C, generational=True)
+        write_ivf_index(bad, path, "embedding", "vec_id", centroids=C)
     # no pointer committed: the root has no live generation
     assert genlog.latest_pointer_version(spark, genlog.resolve_root(spark, path)) is None
     # staged debris (if any) is centroid-less => loudly rejected by readers

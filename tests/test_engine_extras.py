@@ -158,7 +158,7 @@ def test_ivf_written_index_partition_pruned_probe(spark, tmp_path):
         "vec_id long, embedding array<float>",
     )
     path = str(tmp_path / "ivf")
-    centroids = write_ivf_index(df, path, "embedding", "vec_id", n_clusters=5, seed=1, generational=False)
+    centroids = write_ivf_index(df, path, "embedding", "vec_id", n_clusters=5, seed=1)
     assert centroids.shape == (5, 8)
 
     q = [float(x) for x in vecs[7]]

@@ -32,10 +32,10 @@ def _stores(spark, tmp_path):
     t.write(df.select("doc_id", "text").filter("doc_id >= 10"), mode="append")
 
     ivf = str(tmp_path / "ivf")
-    write_ivf_index(df, ivf, "embedding", "doc_id", n_clusters=3, max_iter=2, generational=False)
+    write_ivf_index(df, ivf, "embedding", "doc_id", n_clusters=3, max_iter=2)
 
     mh = str(tmp_path / "mh")
-    write_minhash_index(df, "text", "doc_id", mh, generational=False)
+    write_minhash_index(df, "text", "doc_id", mh)
     return base, txn, ivf, mh
 
 
@@ -66,11 +66,18 @@ def test_erase_subject_reaches_all_four_stores(spark, tmp_path):
     t = TxnTable(spark, txn)
     for v in t._versions():
         assert t.read(v).filter("doc_id = 7").count() == 0
-    assert spark.read.parquet(ivf).filter("doc_id = 7").count() == 0
+    # index read-backs go through the live pointer, like every reader
     import os
-    assert (
-        spark.read.parquet(os.path.join(mh, "buckets")).filter("doc = 7").count() == 0
+
+    from etl_hiscox_spark.operators.similarity import _read_ivf_segments
+    from etl_hiscox_spark.sources.genlog import live_index_paths
+
+    ivf_rows = _read_ivf_segments(spark, live_index_paths(spark, ivf))
+    assert ivf_rows.filter("doc_id = 7").count() == 0
+    mh_buckets = spark.read.parquet(
+        *[os.path.join(p, "buckets") for p in live_index_paths(spark, mh)]
     )
+    assert mh_buckets.filter("doc = 7").count() == 0
     # other subjects untouched
     assert spark.read.parquet(base).count() == 19
     assert t.read().count() == 19

@@ -75,7 +75,7 @@ def test_minhash_generational_full_lifecycle_no_renames(
     root = "file://" + str(tmp_path / f"{forbid_data_dir_renames}_mh")
     docs = _docs(spark)
     old = docs.filter(F.col("doc_id") < 20)
-    write_minhash_index(old, "text", "doc_id", root, generational=True)
+    write_minhash_index(old, "text", "doc_id", root)
     assert live_index_path(spark, root) != root.rstrip("/")
     base_pairs = _probe_pairs(spark, root, docs)
     assert base_pairs  # doc 3 found through the pointer resolution
@@ -135,20 +135,20 @@ def test_minhash_generational_crash_before_pointer_leaves_old_live(spark, tmp_pa
     """The staged-generation crash window: a complete (or partial) stage
     without a pointer commit is invisible — the old generation answers
     every probe, and vacuum reclaims the debris."""
-    from etl_hiscox_spark.operators.dedup import write_minhash_index
+    from etl_hiscox_spark.operators.dedup import _write_minhash_segment, write_minhash_index
     from etl_hiscox_spark.sources import genlog
 
     root = "file://" + str(tmp_path / "mh")
     docs = _docs(spark)
-    write_minhash_index(docs, "text", "doc_id", root, generational=True)
+    write_minhash_index(docs, "text", "doc_id", root)
     v_before, gen_before = genlog.current_generation(spark, root)
     pairs_before = _probe_pairs(spark, root, docs)
 
     # simulate a maintenance run that crashed after staging: a complete
     # new index tree exists under the root but no pointer names it
     stage = genlog._join(root, genlog.new_generation_name())
-    write_minhash_index(docs.filter("doc_id < 5"), "text", "doc_id", stage,
-                        num_hashes=32, num_bands=8, generational=False)
+    _write_minhash_segment(docs.filter("doc_id < 5"), "text", "doc_id", stage,
+                           num_hashes=32, num_bands=8)
     assert genlog.current_generation(spark, root) == (v_before, gen_before)
     assert _probe_pairs(spark, root, docs) == pairs_before
     # the default retention window protects a possibly-in-flight stage...
@@ -169,7 +169,7 @@ def test_pointer_commit_collision_is_loud(spark, tmp_path):
     from etl_hiscox_spark.sources import genlog
 
     root = "file://" + str(tmp_path / "mh")
-    write_minhash_index(_docs(spark, 10), "text", "doc_id", root, generational=True)
+    write_minhash_index(_docs(spark, 10), "text", "doc_id", root)
     base, _ = genlog.current_generation(spark, root)  # both ops resolve here
 
     genlog.commit_generation(spark, root, "gen-aaaaaaaaaaaa", "erase", base_version=base)
@@ -193,7 +193,7 @@ def test_generational_maintenance_race_collides_end_to_end(spark, tmp_path):
 
     root = "file://" + str(tmp_path / "mh")
     docs = _docs(spark)
-    write_minhash_index(docs, "text", "doc_id", root, generational=True)
+    write_minhash_index(docs, "text", "doc_id", root)
 
     # interleave deterministically: when compact resolves its base, fire
     # the erase BEFORE compact's own commit lands (the scoped hook is
@@ -219,17 +219,19 @@ def test_generational_maintenance_race_collides_end_to_end(spark, tmp_path):
 
 
 def test_generational_build_rejects_flat_debris(spark, tmp_path):
-    """r12 review: generational=True over a root already holding a FLAT
+    """r12 review: a build over a root already holding a legacy FLAT
     index would strand the flat tree as unreclaimable debris (a GDPR
     retention leak) — reject loudly; the explicit local migration folds
     it in as generation 0 instead."""
     import numpy as np
 
     from etl_hiscox_spark.operators.dedup import (
+        _write_minhash_segment,
         migrate_flat_index_to_generational,
         write_minhash_index,
     )
     from etl_hiscox_spark.operators.similarity import (
+        _write_ivf_segment,
         ivf_probe_topk,
         random_hyperplanes,
         write_ivf_index,
@@ -238,9 +240,9 @@ def test_generational_build_rejects_flat_debris(spark, tmp_path):
 
     docs = _docs(spark)
     flat = str(tmp_path / "mh_flat")
-    write_minhash_index(docs, "text", "doc_id", flat, generational=False)
+    _write_minhash_segment(docs, "text", "doc_id", flat)
     with pytest.raises(ValueError, match="strand a flat index"):
-        write_minhash_index(docs, "text", "doc_id", flat, generational=True)
+        write_minhash_index(docs, "text", "doc_id", flat)
     # migration folds the flat tree into generation 0; probes keep working
     pairs_before = _probe_pairs(spark, flat, docs)
     migrate_flat_index_to_generational(spark, flat)
@@ -253,10 +255,10 @@ def test_generational_build_rejects_flat_debris(spark, tmp_path):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     ivf_flat = str(tmp_path / "ivf_flat")
     planes = random_hyperplanes(dim=4, n_planes=3, seed=1)
-    write_ivf_index(emb, ivf_flat, "embedding", "vec_id", centroids=planes, generational=False)
+    _write_ivf_segment(emb, ivf_flat, "embedding", "vec_id", centroids=planes)
     with pytest.raises(ValueError, match="strand a flat index"):
         write_ivf_index(
-            emb, ivf_flat, "embedding", "vec_id", centroids=planes, generational=True
+            emb, ivf_flat, "embedding", "vec_id", centroids=planes
         )
     migrate_flat_index_to_generational(spark, ivf_flat)
     got = ivf_probe_topk(
@@ -293,7 +295,7 @@ def test_ivf_generational_full_lifecycle_no_renames(
     planes = random_hyperplanes(dim=8, n_planes=4, seed=3)
     write_ivf_index(
         emb.filter("vec_id < 40"), root, "embedding", "vec_id",
-        centroids=planes, quantize=True, generational=True,
+        centroids=planes, quantize=True,
     )
     append_to_ivf_index(emb.filter("vec_id >= 40"), root, "embedding", "vec_id")
     q = rows[0][1]
@@ -370,10 +372,9 @@ def test_gdpr_erase_subject_reaches_generational_indexes(spark, tmp_path):
     df = spark.createDataFrame(rows, "doc_id long, text string, embedding array<float>")
     ivf = "file://" + str(tmp_path / "ivf")
     write_ivf_index(df, ivf, "embedding", "doc_id",
-                    centroids=random_hyperplanes(dim=4, n_planes=3, seed=1),
-                    generational=True)
+                    centroids=random_hyperplanes(dim=4, n_planes=3, seed=1))
     mh = "file://" + str(tmp_path / "mh")
-    write_minhash_index(df, "text", "doc_id", mh, generational=True)
+    write_minhash_index(df, "text", "doc_id", mh)
     report = erase_subject(
         spark,
         spark.createDataFrame([(7,)], "doc_id long"),
@@ -391,8 +392,12 @@ def test_generational_build_rejects_cross_layout_debris(spark, tmp_path):
     GDPR-relevant data just the same."""
     import numpy as np
 
-    from etl_hiscox_spark.operators.dedup import write_minhash_index
-    from etl_hiscox_spark.operators.similarity import random_hyperplanes, write_ivf_index
+    from etl_hiscox_spark.operators.dedup import _write_minhash_segment, write_minhash_index
+    from etl_hiscox_spark.operators.similarity import (
+        _write_ivf_segment,
+        random_hyperplanes,
+        write_ivf_index,
+    )
 
     docs = _docs(spark, 10)
     rng = np.random.default_rng(4)
@@ -403,15 +408,15 @@ def test_generational_build_rejects_cross_layout_debris(spark, tmp_path):
     planes = random_hyperplanes(dim=4, n_planes=3, seed=1)
 
     mh_root = str(tmp_path / "mh")
-    write_minhash_index(docs, "text", "doc_id", mh_root, generational=False)
+    _write_minhash_segment(docs, "text", "doc_id", mh_root)
     with pytest.raises(ValueError, match="strand a flat index"):
         write_ivf_index(emb, mh_root, "embedding", "vec_id",
-                        centroids=planes, generational=True)
+                        centroids=planes)
 
     ivf_root = str(tmp_path / "ivf")
-    write_ivf_index(emb, ivf_root, "embedding", "vec_id", centroids=planes, generational=False)
+    _write_ivf_segment(emb, ivf_root, "embedding", "vec_id", centroids=planes)
     with pytest.raises(ValueError, match="strand a flat index"):
-        write_minhash_index(docs, "text", "doc_id", ivf_root, generational=True)
+        write_minhash_index(docs, "text", "doc_id", ivf_root)
 
 
 def test_migrate_flat_index_recovers_from_every_crash_window(spark, tmp_path):
@@ -422,14 +427,14 @@ def test_migrate_flat_index_recovers_from_every_crash_window(spark, tmp_path):
     import shutil
 
     from etl_hiscox_spark.operators.dedup import (
+        _write_minhash_segment,
         migrate_flat_index_to_generational,
-        write_minhash_index,
     )
     from etl_hiscox_spark.sources import genlog
 
     docs = _docs(spark)
     root = str(tmp_path / "mh")
-    write_minhash_index(docs, "text", "doc_id", root, generational=False)
+    _write_minhash_segment(docs, "text", "doc_id", root)
     pairs = _probe_pairs(spark, root, docs)
 
     # crash window 1: gen dir created, only ONE entry moved
@@ -442,7 +447,7 @@ def test_migrate_flat_index_recovers_from_every_crash_window(spark, tmp_path):
 
     # crash window 2: everything moved, pointer commit never ran
     root2 = str(tmp_path / "mh2")
-    write_minhash_index(docs, "text", "doc_id", root2, generational=False)
+    _write_minhash_segment(docs, "text", "doc_id", root2)
     gen2 = "gen-bbbbbbbbbbbb"
     os.makedirs(os.path.join(root2, gen2))
     for entry in list(os.listdir(root2)):
@@ -453,7 +458,7 @@ def test_migrate_flat_index_recovers_from_every_crash_window(spark, tmp_path):
 
     # two adoptable gen dirs and no pointer: refuse, never guess
     root3 = str(tmp_path / "mh3")
-    write_minhash_index(docs, "text", "doc_id", root3, generational=False)
+    _write_minhash_segment(docs, "text", "doc_id", root3)
     shutil.copytree(os.path.join(root3, "buckets"), os.path.join(root3, "gen-x1/buckets"))
     shutil.copytree(os.path.join(root3, "buckets"), os.path.join(root3, "gen-x2/buckets"))
     with pytest.raises(ValueError, match="gen-\\* dirs but no pointer"):
@@ -464,7 +469,7 @@ def test_migrate_flat_index_recovers_from_every_crash_window(spark, tmp_path):
     # an empty log; re-running migrate must adopt, not raise "already
     # generational" (and reads must work after, not demand manual cleanup)
     root4 = str(tmp_path / "mh4")
-    write_minhash_index(docs, "text", "doc_id", root4, generational=False)
+    _write_minhash_segment(docs, "text", "doc_id", root4)
     gen4 = "gen-dddddddddddd"
     os.makedirs(os.path.join(root4, gen4))
     for entry in list(os.listdir(root4)):
@@ -482,7 +487,7 @@ def test_migrate_flat_index_recovers_from_every_crash_window(spark, tmp_path):
 def test_default_build_layout_is_generational(spark, tmp_path):
     """r13 (VERDICT r12 item 3): a bare build — no layout flag — must
     produce the object-store-safe generation-pointer layout for BOTH
-    index kinds; generational=False still builds the legacy flat tree."""
+    index kinds."""
     from etl_hiscox_spark.operators.dedup import write_minhash_index
     from etl_hiscox_spark.operators.similarity import ivf_probe_topk, write_ivf_index
     from etl_hiscox_spark.sources import genlog
@@ -508,11 +513,6 @@ def test_default_build_layout_is_generational(spark, tmp_path):
     )
     assert out.count() == 3
 
-    flat_root = str(tmp_path / "mh_flat")
-    write_minhash_index(docs, "text", "doc_id", flat_root, generational=False)
-    assert not genlog.is_generational(spark, flat_root)
-    assert os.path.isdir(os.path.join(flat_root, "buckets"))
-
 
 def test_generational_probe_keeps_partition_pruning(spark, tmp_path):
     """Pointer resolution must not cost the IVF layout its core property:
@@ -527,8 +527,7 @@ def test_generational_probe_keeps_partition_pruning(spark, tmp_path):
         "vec_id long, embedding array<float>",
     )
     root = "file://" + str(tmp_path / "ivf")
-    write_ivf_index(emb, root, "embedding", "vec_id", n_clusters=4, max_iter=2,
-                    generational=True)
+    write_ivf_index(emb, root, "embedding", "vec_id", n_clusters=4, max_iter=2)
     live = live_index_path(spark, root)
     assert live != root  # resolution actually happened
     pruned = spark.read.parquet(live).filter(F.col("__cluster").isin([0, 1]))
@@ -555,8 +554,7 @@ def test_occ_append_survives_racing_erase(spark, tmp_path):
 
     root = "file://" + str(tmp_path / "mh")
     docs = _docs(spark)
-    write_minhash_index(docs.filter("doc_id < 20"), "text", "doc_id", root,
-                        generational=True)
+    write_minhash_index(docs.filter("doc_id < 20"), "text", "doc_id", root)
 
     # fire the erase on the SECOND resolve — append_segment's own head
     # read — so the returned head is stale by the time the commit lands:
@@ -615,7 +613,7 @@ def test_occ_append_restages_after_geometry_rebuild(spark, tmp_path):
     planes = random_hyperplanes(dim=8, n_planes=4, seed=3)
     write_ivf_index(
         emb.filter("vec_id < 40"), root, "embedding", "vec_id",
-        centroids=planes, generational=True,
+        centroids=planes,
     )
 
     fired = {"done": False}
@@ -663,7 +661,7 @@ def test_multi_segment_probe_keeps_partition_pruning(spark, tmp_path):
     )
     root = "file://" + str(tmp_path / "ivf")
     write_ivf_index(emb.filter("vec_id < 30"), root, "embedding", "vec_id",
-                    n_clusters=4, max_iter=2, generational=True)
+                    n_clusters=4, max_iter=2)
     append_to_ivf_index(emb.filter("vec_id >= 30"), root, "embedding", "vec_id")
     paths = live_index_paths(spark, root)
     assert len(paths) == 2
@@ -690,8 +688,7 @@ def test_txn_watermark_appends_are_exactly_once(spark, tmp_path):
 
     root = "file://" + str(tmp_path / "mh")
     docs = _docs(spark)
-    write_minhash_index(docs.filter("doc_id < 10"), "text", "doc_id", root,
-                        generational=True)
+    write_minhash_index(docs.filter("doc_id < 10"), "text", "doc_id", root)
 
     def append(lo, hi, batch):
         write_minhash_index(
@@ -723,22 +720,62 @@ def test_txn_watermark_appends_are_exactly_once(spark, tmp_path):
 
 
 def test_txn_tag_on_flat_root_is_rejected(spark, tmp_path):
-    """A txn-tagged append on a FLAT root has no ledger to honor — it
-    must refuse loudly, never silently degrade to at-least-once."""
-    from etl_hiscox_spark.operators.dedup import write_minhash_index
-    from etl_hiscox_spark.operators.similarity import (
-        append_to_ivf_index,
-        random_hyperplanes,
-        write_ivf_index,
+    """A LEGACY flat root (written before every build became
+    generational) is read-and-migrate only: probes answer from the root,
+    every maintenance op — a txn-tagged append included, which has no
+    ledger to honor there — refuses loudly with the migration hint, and
+    after migrate_flat_index_to_generational the full lifecycle runs."""
+    from etl_hiscox_spark.operators.dedup import (
+        _write_minhash_segment,
+        compact_minhash_index,
+        erase_from_minhash_index,
+        migrate_flat_index_to_generational,
+        rebuild_minhash_index,
+        write_minhash_index,
     )
+    from etl_hiscox_spark.operators.similarity import (
+        _write_ivf_segment,
+        append_to_ivf_index,
+        compact_ivf_index,
+        erase_from_ivf_index,
+        ivf_probe_topk,
+        random_hyperplanes,
+        rebuild_ivf_index,
+    )
+    from etl_hiscox_spark.sources import genlog
 
+    hint = "migrate_flat_index_to_generational"
     docs = _docs(spark)
     flat = str(tmp_path / "mh_flat")
-    write_minhash_index(docs, "text", "doc_id", flat, generational=False)
-    with pytest.raises(ValueError, match="GENERATIONAL"):
-        write_minhash_index(
+    _write_minhash_segment(docs, "text", "doc_id", flat)
+    pairs = _probe_pairs(spark, flat, docs)
+    assert pairs  # the legacy read path answers
+    erase = docs.filter("doc_id = 3").select("doc_id")
+    for op in (
+        lambda: write_minhash_index(
             docs, "text", "doc_id", flat, mode="append", txn=("app", 0)
-        )
+        ),
+        lambda: write_minhash_index(docs, "text", "doc_id", flat, mode="append"),
+        lambda: compact_minhash_index(spark, flat),
+        lambda: erase_from_minhash_index(spark, flat, erase, "doc_id"),
+        lambda: rebuild_minhash_index(spark, docs, "text", "doc_id", flat),
+    ):
+        with pytest.raises(ValueError, match=hint):
+            op()
+    assert not genlog.is_generational(spark, flat)  # refusals touched nothing
+    migrate_flat_index_to_generational(spark, flat)
+    assert _probe_pairs(spark, flat, docs) == pairs
+    write_minhash_index(
+        docs.filter("doc_id < 5").withColumn("doc_id", F.col("doc_id") + 100),
+        "text", "doc_id", flat, mode="append", txn=("app", 0),
+    )
+    compact_minhash_index(spark, flat)
+    assert erase_from_minhash_index(spark, flat, erase, "doc_id") == 6
+    rebuild_minhash_index(spark, docs.filter("doc_id != 3"), "text", "doc_id", flat)
+    assert 3 not in _probe_pairs(spark, flat, docs)
+    assert [g["operation"] for g in genlog.list_generations(spark, flat)] == [
+        "migrate", "append", "compact", "erase", "rebuild",
+    ]
 
     rng = np.random.default_rng(31)
     emb = spark.createDataFrame(
@@ -746,11 +783,39 @@ def test_txn_tag_on_flat_root_is_rejected(spark, tmp_path):
         "vec_id long, embedding array<float>",
     )
     ivf_flat = str(tmp_path / "ivf_flat")
-    write_ivf_index(emb, ivf_flat, "embedding", "vec_id",
-                    centroids=random_hyperplanes(dim=8, n_planes=4, seed=3),
-                    generational=False)
-    with pytest.raises(ValueError, match="GENERATIONAL"):
-        append_to_ivf_index(emb, ivf_flat, "embedding", "vec_id", txn=("app", 0))
+    _write_ivf_segment(emb, ivf_flat, "embedding", "vec_id",
+                       centroids=random_hyperplanes(dim=8, n_planes=4, seed=3))
+    q = [float(x) for x in rng.standard_normal(8)]
+
+    def top3() -> list[int]:
+        out = ivf_probe_topk(spark, ivf_flat, None, "embedding", "vec_id", q, k=3, n_probe=4)
+        return [r["vec_id"] for r in out.collect()]
+
+    top_before = top3()
+    assert len(top_before) == 3
+    vec_erase = emb.filter("vec_id = 5").select("vec_id")
+    for op in (
+        lambda: append_to_ivf_index(emb, ivf_flat, "embedding", "vec_id", txn=("app", 0)),
+        lambda: append_to_ivf_index(emb, ivf_flat, "embedding", "vec_id"),
+        lambda: compact_ivf_index(spark, ivf_flat),
+        lambda: erase_from_ivf_index(spark, ivf_flat, vec_erase, "vec_id"),
+        lambda: rebuild_ivf_index(spark, ivf_flat, "embedding", "vec_id", max_iter=2),
+    ):
+        with pytest.raises(ValueError, match=hint):
+            op()
+    migrate_flat_index_to_generational(spark, ivf_flat)
+    assert top3() == top_before
+    append_to_ivf_index(
+        emb.filter("vec_id < 4").withColumn("vec_id", F.col("vec_id") + 100),
+        ivf_flat, "embedding", "vec_id", txn=("app", 0),
+    )
+    compact_ivf_index(spark, ivf_flat)
+    assert erase_from_ivf_index(spark, ivf_flat, vec_erase, "vec_id") == 1
+    rebuild_ivf_index(spark, ivf_flat, "embedding", "vec_id", max_iter=2)
+    assert 5 not in top3()
+    assert [g["operation"] for g in genlog.list_generations(spark, ivf_flat)] == [
+        "migrate", "append", "compact", "erase", "rebuild",
+    ]
 
 
 def test_overwrite_build_carries_txn_watermarks(spark, tmp_path):
@@ -1806,7 +1871,7 @@ def test_generational_single_segment_no_hit_erase_commits_nothing(spark, tmp_pat
 
     root = "file://" + str(tmp_path / "mh_nohit")
     docs = _docs(spark)
-    write_minhash_index(docs, "text", "doc_id", root, generational=True)
+    write_minhash_index(docs, "text", "doc_id", root)
     assert [g["operation"] for g in genlog.list_generations(spark, root)] == ["build"]
     ghost = spark.createDataFrame([(424242,)], "doc_id long")
     assert erase_from_minhash_index(spark, root, ghost, "doc_id") == 0
@@ -1830,7 +1895,7 @@ def test_generational_single_segment_hit_erase_counts_exact_rows(spark, tmp_path
 
     root = "file://" + str(tmp_path / "mh_hit")
     docs = _docs(spark)
-    write_minhash_index(docs, "text", "doc_id", root, num_hashes=24, num_bands=6, generational=True)
+    write_minhash_index(docs, "text", "doc_id", root, num_hashes=24, num_bands=6)
     keys = spark.createDataFrame([(3,), (7,)], "doc_id long")
     assert erase_from_minhash_index(spark, root, keys, "doc_id") == 12  # 2 docs x 6 bands
     ops = [g["operation"] for g in genlog.list_generations(spark, root)]
