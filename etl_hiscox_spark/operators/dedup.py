@@ -29,6 +29,7 @@ from pyspark.errors import AnalysisException as _SparkAnalysisError
 
 from etl_hiscox_spark.functions.text import content_hash, normalize_text, shingles
 from etl_hiscox_spark.operators.caching import adopt_caches, attach_owned_caches
+from etl_hiscox_spark.sources.commitio import _meta_is_local
 
 # ---------------------------------------------------------------------------
 # L1: exact dedup
@@ -1456,7 +1457,9 @@ def erase_from_minhash_index(spark, path: str, keys: DataFrame, id_col: str) -> 
         n_erased = (o_tot.get["n"] or 0) - (o_kept.get["n"] or 0)
         if n_erased == 0:
             try:  # tidy the no-hit stage now; vacuum reclaims on failure
-                fs_, p_ = genlog._fs(target)
+                from etl_hiscox_spark.sources.listing import _resolve_fs
+
+                fs_, p_ = _resolve_fs(target)
                 fs_.delete_dir(p_)
             except (FileNotFoundError, OSError):
                 pass
@@ -1606,31 +1609,6 @@ def rebuild_minhash_index(
         txn_watermarks=rec.get("txn_watermarks"),
     )
     return new
-
-
-def _meta_is_local(spark, path: str) -> bool:
-    """True only when the path resolves to the DRIVER's local filesystem.
-
-    An explicit remote scheme (hdfs://, s3a://, ...) is never local; a
-    scheme-less path is local only if Spark's fs.defaultFS is file: —
-    on a cluster with defaultFS=hdfs://, '/warehouse/idx' goes to HDFS
-    via Spark while a naive driver-side shortcut would write the meta to
-    the driver's local disk, splitting the index (and a STALE local meta
-    could then band a probe differently from its index — the exact drift
-    the meta exists to prevent).
-
-    Any ``file:`` prefix counts as local (ADVICE r11): Hadoop's
-    ``Path.toString()`` renders local URIs as single-slash ``file:/x``,
-    which has no ``://`` — without this the fragmentation walk would
-    mis-qualify the dir with a non-file defaultFS."""
-    if path.startswith("file:"):
-        return True
-    if "://" in path:
-        return False
-    default_fs = (
-        spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")
-    )
-    return default_fs.startswith("file:")
 
 
 def _write_index_meta(spark, path: str, num_hashes: int, num_bands: int, shingle_k: int) -> None:

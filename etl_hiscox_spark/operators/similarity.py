@@ -608,7 +608,7 @@ def _write_ivf_centroids(
     # survives every maintenance op by construction (compact and erase
     # rewrite it unchanged, rebuild rewrites it with the same flag), so
     # the flag can never drift from the layout.
-    from etl_hiscox_spark.operators.dedup import _meta_is_local
+    from etl_hiscox_spark.sources.commitio import _meta_is_local
 
     cdir = os.path.join(path, "_centroids")
     if _meta_is_local(spark, path):
@@ -647,7 +647,7 @@ def _write_ivf_centroids(
 
 def _read_ivf_centroid_rows(spark, path: str, resolved: bool = False) -> list[dict]:
     """Raw rows of the ``_centroids`` commit record, loud when missing."""
-    from etl_hiscox_spark.operators.dedup import _meta_is_local
+    from etl_hiscox_spark.sources.commitio import _meta_is_local
 
     if not resolved:  # callers that already resolved skip the re-stat (r12)
         from etl_hiscox_spark.sources.genlog import live_index_paths
@@ -1076,7 +1076,9 @@ def erase_from_ivf_index(spark, path: str, keys: DataFrame, id_col: str) -> int:
             # write of an empty frame leaves no readable files) —
             # drop the stage either way
             try:
-                fs_, p_ = genlog._fs(target)
+                from etl_hiscox_spark.sources.listing import _resolve_fs
+
+                fs_, p_ = _resolve_fs(target)
                 fs_.delete_dir(p_)
             except (FileNotFoundError, OSError):
                 pass

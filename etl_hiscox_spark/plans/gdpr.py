@@ -118,7 +118,7 @@ def erase_subject(
             t = TxnTable(spark, path)
             n = t.erase_keys(key_col, kdf.select(F.col(kc).alias(key_col)))
             if verify:
-                for v in t._versions():
+                for v in t._log.versions():
                     if residuals(t.read(v), key_col):
                         raise ValueError(
                             f"erase_subject: residual subject rows in txn table "

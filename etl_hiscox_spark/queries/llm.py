@@ -4866,12 +4866,13 @@ def l2_lsh_retired_version_guard_probe(spark: SparkSession, sf_dir: str) -> Data
     genlog.vacuum_generations(spark, root, keep_last=1, min_age_seconds=0.0)
 
     resolved = genlog.resolve_root(spark, root)
-    if genlog._pointer_versions(resolved) != [2]:
+    log = genlog._pointer_log(resolved)
+    if log.versions() != [2]:
         raise ValueError(
             f"expected the vacuum to trim the pointer prefix to [2], got "
-            f"{genlog._pointer_versions(resolved)}"
+            f"{log.versions()}"
         )
-    floor = genlog._read_vacuum_floor(resolved)
+    floor = log.read_floor()
     if floor != 1:
         raise ValueError(f"vacuum floor marker records {floor}, expected 1")
 
@@ -4893,7 +4894,7 @@ def l2_lsh_retired_version_guard_probe(spark: SparkSession, sf_dir: str) -> Data
             "a stale-resolved commit at a vacuumed version number was NOT "
             "refused — the retention reuse guard is broken"
         )
-    if genlog._pointer_versions(resolved) != [2]:
+    if log.versions() != [2]:
         raise ValueError("the refused commit left debris in the pointer log")
 
     # recovery above the floor: the production conflict wrapper re-runs
@@ -4981,16 +4982,17 @@ def l2_lsh_tombstone_coalesce_probe(spark: SparkSession, sf_dir: str) -> DataFra
     genlog.vacuum_generations(spark, root, keep_last=1, min_age_seconds=0.0)
 
     resolved = genlog.resolve_root(spark, root)
-    if genlog._pointer_versions(resolved) != [2]:
+    log = genlog._pointer_log(resolved)
+    if log.versions() != [2]:
         raise ValueError(
-            f"vacuum#1 must delist v0/v1, got {genlog._pointer_versions(resolved)}"
+            f"vacuum#1 must delist v0/v1, got {log.versions()}"
         )
-    filesystem, log_path = genlog._fs(genlog._join(resolved, genlog._GEN_LOG))
+    filesystem, log_path = log.fs, log.dir
     for v in (0, 1):
         with filesystem.open_input_file(f"{log_path}/v{v}.json") as f:
             if not _json.loads(f.read().decode("utf-8")).get("tombstone"):
                 raise ValueError(f"retired v{v} must hold a tombstone record")
-    names = {i.base_name for i in genlog._log_infos(resolved)}
+    names = set(log.names())
     if not {"v0.retired", "v1.retired"} <= names:
         raise ValueError(f"retired sidecars missing from the log listing: {names}")
 
@@ -5023,15 +5025,15 @@ def l2_lsh_tombstone_coalesce_probe(spark: SparkSession, sf_dir: str) -> DataFra
     # vacuum#2: v2 joins the tombstones (floor 2), and the v0/v1 pairs —
     # covered by the floor since BEFORE this run — are coalesced away
     genlog.vacuum_generations(spark, root, keep_last=1, min_age_seconds=0.0)
-    names = {i.base_name for i in genlog._log_infos(resolved)}
+    names = set(log.names())
     for gone in ("v0.json", "v0.retired", "v1.json", "v1.retired"):
         if gone in names:
             raise ValueError(f"vacuum#2 must coalesce {gone}, still listed: {names}")
     if not {"v2.json", "v2.retired"} <= names:
         raise ValueError(f"the newest trim (v2) must stay tombstoned: {names}")
-    if genlog._read_vacuum_floor(resolved) != 2:
+    if log.read_floor() != 2:
         raise ValueError("the floor marker must record the v2 trim")
-    if genlog._pointer_versions(resolved) != [3]:
+    if log.versions() != [3]:
         raise ValueError("the erase head must be the only live pointer")
 
     # stale commit at the now-FREED v1: nothing occupies the name any
@@ -5046,7 +5048,7 @@ def l2_lsh_tombstone_coalesce_probe(spark: SparkSession, sf_dir: str) -> DataFra
         raise ValueError("stale commit at a coalesced name was NOT refused")
     except FileExistsError:
         pass
-    if "v1.json" in {i.base_name for i in genlog._log_infos(resolved)}:
+    if "v1.json" in set(log.names()):
         raise ValueError("the refused commit left debris at the freed name")
 
     out = probe_minhash_index(
@@ -5085,7 +5087,7 @@ def l2_lsh_tombstone_coalesce_probe(spark: SparkSession, sf_dir: str) -> DataFra
 )
 def l2_lsh_half_retired_repair_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # HALF-RETIRED REPAIR LIFECYCLE, driver-executed for real (r17,
-    # ADVICE r16: a ``_retire_pointer`` that wrote the ``.retired``
+    # ADVICE r16: a retire (``VersionLog.retire``) that wrote the ``.retired``
     # sidecar and then lost the tombstone content replace left a name
     # that is EXCLUDED from the live listing — so no vacuum ever
     # re-victims it — yet still SERVES the retired record on a direct
@@ -5128,9 +5130,10 @@ def l2_lsh_half_retired_repair_probe(spark: SparkSession, sf_dir: str) -> DataFr
         )
     genlog.vacuum_generations(spark, root, keep_last=1, min_age_seconds=0.0)
     resolved = genlog.resolve_root(spark, root)
-    if genlog._pointer_versions(resolved) != [2]:
+    log = genlog._pointer_log(resolved)
+    if log.versions() != [2]:
         raise ValueError(
-            f"vacuum#1 must delist v0/v1, got {genlog._pointer_versions(resolved)}"
+            f"vacuum#1 must delist v0/v1, got {log.versions()}"
         )
 
     def _erase(mod: int) -> None:
@@ -5145,12 +5148,12 @@ def l2_lsh_half_retired_repair_probe(spark: SparkSession, sf_dir: str) -> DataFr
 
     # INJECT the crash residue a lost content replace leaves: the
     # sidecar exists, the content is still the live v2 record
-    filesystem, log_path = genlog._fs(genlog._join(resolved, genlog._GEN_LOG))
+    filesystem, log_path = log.fs, log.dir
     with filesystem.open_output_stream(f"{log_path}/v2.retired") as fh:
         fh.write(b"")
     # the hazard, observed: v2 is delisted everywhere (no vacuum would
     # ever re-victim it) ...
-    if genlog._pointer_versions(resolved) != [3]:
+    if log.versions() != [3]:
         raise ValueError("the sidecar must delist v2 from the live listing")
     if [r["version"] for r in genlog.list_generations(spark, resolved)] != [3]:
         raise ValueError("history must exclude the half-retired v2")
@@ -5174,7 +5177,7 @@ def l2_lsh_half_retired_repair_probe(spark: SparkSession, sf_dir: str) -> DataFr
 
     _erase(12)  # v4
     genlog.vacuum_generations(spark, root, keep_last=1, min_age_seconds=0.0)
-    names = {i.base_name for i in genlog._log_infos(resolved)}
+    names = set(log.names())
     # vacuum#3's floor_before (=1) coalesces v0/v1; the repaired v2 pair
     # is above it and must survive this cycle intact
     for gone in ("v0.json", "v0.retired", "v1.json", "v1.retired"):
@@ -5185,13 +5188,13 @@ def l2_lsh_half_retired_repair_probe(spark: SparkSession, sf_dir: str) -> DataFr
 
     _erase(8)  # v5
     genlog.vacuum_generations(spark, root, keep_last=1, min_age_seconds=0.0)
-    names = {i.base_name for i in genlog._log_infos(resolved)}
+    names = set(log.names())
     for gone in ("v2.json", "v2.retired"):
         if gone in names:
             raise ValueError(
                 f"the REPAIRED pair must coalesce through the normal path: {names}"
             )
-    if genlog._pointer_versions(resolved) != [5]:
+    if log.versions() != [5]:
         raise ValueError("the erase#3 head must be the only live pointer")
 
     # stale commit at the freed-and-repaired v2: only the floor guard
@@ -5206,7 +5209,7 @@ def l2_lsh_half_retired_repair_probe(spark: SparkSession, sf_dir: str) -> DataFr
         raise ValueError("stale commit at the repaired-and-freed name not refused")
     except FileExistsError:
         pass
-    if "v2.json" in {i.base_name for i in genlog._log_infos(resolved)}:
+    if "v2.json" in set(log.names()):
         raise ValueError("the refused commit left debris at the freed name")
 
     out = probe_minhash_index(

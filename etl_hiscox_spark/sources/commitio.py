@@ -4,16 +4,16 @@
 Both commit logs in this repo — the txn-table manifest log
 (:mod:`txnlog`, carrying the exactly-once sink / OPTIMIZE / OCC / GDPR
 history protocols) and the index generation-pointer log (:mod:`genlog`)
-— reduce every correctness claim to one primitive: *commit these bytes
-at this name, failing loudly if the name is already committed*. Before
-r13 each log carried its own copy and the non-local branch degraded on
-S3-class stores: ``exists-check + move`` is atomic on HDFS (rename
-refuses an existing destination) but on S3 ``move`` is copy+delete and
-silently REPLACES — two racing maintenance ops could both pass the
-check and the later one would overwrite the pointer, defeating the
-base-version collision guard (a compact staged pre-erase could
-resurrect GDPR-erased rows). This module is the one implementation,
-with the degradation removed:
+— run on one versioned-log core (:mod:`versionlog`) and reduce every
+correctness claim to one primitive: *commit these bytes at this name,
+failing loudly if the name is already committed*. Before r13 the
+non-local branch degraded on S3-class stores: ``exists-check + move``
+is atomic on HDFS (rename refuses an existing destination) but on S3
+``move`` is copy+delete and silently REPLACES — two racing maintenance
+ops could both pass the check and the later one would overwrite the
+pointer, defeating the base-version collision guard (a compact staged
+pre-erase could resurrect GDPR-erased rows). This module is the one
+implementation, with the degradation removed:
 
 - **driver-local** paths (``file:`` scheme, or scheme-less with
   ``fs.defaultFS=file:``): tmp write + ``os.link`` — POSIX's
@@ -95,8 +95,8 @@ def s3_replace_put_hook():
 
     botocore failures are re-raised as ``OSError`` (r16, ADVICE r15:
     ClientError/BotoCoreError are NOT OSError subclasses, but the
-    best-effort hint writers — genlog's head hint, TxnTable's checkpoint
-    — swallow exactly OSError; a raw botocore error on a hint write
+    best-effort head-hint writer (``versionlog.VersionLog.write_hint``)
+    swallows exactly OSError; a raw botocore error on a hint write
     would fail a writer whose COMMIT already landed, and the caller's
     retry would double-commit)."""
     import boto3  # deployment-only dependency; ImportError is the gate
@@ -146,10 +146,27 @@ def s3_conditional_put_hook():
     return put_if_absent
 
 
-def _is_local(spark, path: str) -> bool:
-    from etl_hiscox_spark.operators.dedup import _meta_is_local
+def _meta_is_local(spark, path: str) -> bool:
+    """True only when the path resolves to the DRIVER's local filesystem.
 
-    return _meta_is_local(spark, path)
+    An explicit remote scheme (hdfs://, s3a://, ...) is never local; a
+    scheme-less path is local only if Spark's fs.defaultFS is file: —
+    on a cluster with defaultFS=hdfs://, '/warehouse/idx' goes to HDFS
+    via Spark while a naive driver-side shortcut would write to the
+    driver's local disk, splitting the index or table.
+
+    Any ``file:`` prefix counts as local (ADVICE r11): Hadoop's
+    ``Path.toString()`` renders local URIs as single-slash ``file:/x``,
+    which has no ``://`` — without this the fragmentation walk would
+    mis-qualify the dir with a non-file defaultFS."""
+    if path.startswith("file:"):
+        return True
+    if "://" in path:
+        return False
+    default_fs = (
+        spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")
+    )
+    return default_fs.startswith("file:")
 
 
 def commit_if_absent(spark, uri: str, data: bytes) -> None:
@@ -159,7 +176,7 @@ def commit_if_absent(spark, uri: str, data: bytes) -> None:
     reader can never observe a partially-written record. The parent
     directory is created if missing. See the module docstring for the
     per-store primitive and the refusal contract."""
-    if _is_local(spark, uri):
+    if _meta_is_local(spark, uri):
         from etl_hiscox_spark.sources.writers import _local_fs_path
 
         final = _local_fs_path(uri)
@@ -273,10 +290,10 @@ def replace_put(filesystem, path: str, data: bytes) -> None:
     full-object PUT: no multipart, no staged tmp, no copy+delete move,
     no absence window. Otherwise: staged tmp + move; HDFS rename refuses
     an existing destination, so on that refusal the old file is deleted
-    and the move retried. The parent directory must already exist — both
-    hint writers (txn checkpoint, gen-log checkpoint) target the log
-    directory their commit just wrote into, so an extra create_dir RPC
-    per hint would be pure tax."""
+    and the move retried. The parent directory must already exist — the
+    head hint and the retention records target the log directory a
+    commit already wrote into, so an extra create_dir RPC per write
+    would be pure tax."""
     hook = _REPLACE_PUT.get(type(filesystem).__name__)
     if hook is not None:
         hook(filesystem, path, data)

@@ -143,7 +143,7 @@ def distributed_dir_stats(
     """
     import pandas as pd
 
-    from etl_hiscox_spark.operators.dedup import _meta_is_local
+    from etl_hiscox_spark.sources.commitio import _meta_is_local
 
     schema = "key int, n_files long, total_bytes long"
     local_rows: list[tuple[int, int, int]] = []

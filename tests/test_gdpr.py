@@ -64,7 +64,7 @@ def test_erase_subject_reaches_all_four_stores(spark, tmp_path):
     # belt-and-braces residual sweep outside the operator's own verify
     assert spark.read.parquet(base).filter("doc_id = 7").count() == 0
     t = TxnTable(spark, txn)
-    for v in t._versions():
+    for v in t._log.versions():
         assert t.read(v).filter("doc_id = 7").count() == 0
     # index read-backs go through the live pointer, like every reader
     import os

@@ -151,7 +151,7 @@ def test_pointer_protocol_multiactor_stress(tmp_path, seed):
 
     # -- invariants at quiescence ------------------------------------------
     head, _gen = genlog.current_generation(None, root)  # (6) resolves
-    surviving = genlog._pointer_versions(root)
+    surviving = genlog._pointer_log(root).versions()
     assert surviving == list(range(surviving[0], head + 1))  # (1) dense
     assert head == len(commits) - 1  # (2) every success has its version
     records = {v: genlog.read_pointer(root, v) for v in surviving}
@@ -527,7 +527,7 @@ def test_cross_store_gdpr_multiactor_stress(spark, tmp_path):
     assert got == want
     # (3) surviving txn history is readable at every version
     t = TxnTable(spark, txn_root)
-    for v in t._versions():
+    for v in t._log.versions():
         t.read(v).count()
 
     # (4) the minhash index answers for survivors, never for the erased

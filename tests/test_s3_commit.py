@@ -309,7 +309,7 @@ def test_genlog_vacuum_reclaims_on_s3(s3env, s3hook):
     )
     assert tomb.get("tombstone") is True
     assert "vac/_gen_log/v0.retired" in keys
-    assert genlog._pointer_versions(root) == [1]  # retired name delisted
+    assert genlog._pointer_log(root).versions() == [1]  # retired name delisted
     assert "vac/_gen_log/_floor_v0" in keys  # reuse-guard marker landed
     assert "vac/_gen_log/_last_checkpoint" in keys  # REAL hint write landed
     assert genlog.current_generation(None, root) == (1, "gen-b")
@@ -379,7 +379,7 @@ def test_txn_expire_on_s3_advances_checkpoint_watermark_and_expires(s3env, s3hoo
     assert t.expire_versions(keep_last=1) == 2
     assert t.latest_version() == 2
     assert t.last_head_resolution["mode"] == "checkpoint"  # hint landed
-    assert t._read_expire_watermark() == 1 and t._expired_ever()
+    assert t._log.read_floor() == 1 and t._log.trimmed_ever()
     keys = {
         o["Key"]
         for o in s3env["client"].list_objects_v2(

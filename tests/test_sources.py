@@ -417,7 +417,7 @@ def test_txn_erase_keys_purges_every_version(spark, tmp_path):
     assert n >= 1
     assert sorted(r.k for r in t.read(0).collect()) == [1]
     assert sorted(r.k for r in t.read(1).collect()) == [1, 3]
-    assert t._versions() == [0, 1]
+    assert t._log.versions() == [0, 1]
     # surviving values untouched
     assert {(r.k, r.v) for r in t.read().collect()} == {(1, "a"), (3, "c")}
     # no parquet file under the table still contains k=2
@@ -688,7 +688,7 @@ def test_txn_compact_preserves_every_version(spark, tmp_path):
 
     # retention reclaims history storage: keep the compacted head only
     assert t.expire_versions(keep_last=1) == 4
-    assert t._versions() == [4]
+    assert t._log.versions() == [4]
     removed = t.vacuum(min_age_seconds=0)  # settled table: no in-flight writer
     assert removed >= head_files_before
     assert sorted(tuple(r) for r in t.read().collect()) == before[3]

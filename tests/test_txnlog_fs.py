@@ -66,12 +66,13 @@ def _events(spark, lo, hi):
     )
 
 
+@pytest.mark.parametrize("scheme", ["file://", ""], ids=["file-uri", "scheme-less"])
 def test_file_uri_root_full_lifecycle_without_os_branch(
-    spark, tmp_path, forbid_os_manifest_io
+    spark, tmp_path, forbid_os_manifest_io, scheme
 ):
     from etl_hiscox_spark.sources.txnlog import TxnTable
 
-    root = "file://" + str(tmp_path / f"{forbid_os_manifest_io}_tbl")
+    root = scheme + str(tmp_path / f"{forbid_os_manifest_io}_tbl")
     t = TxnTable(spark, root, checkpoint_interval=2)
     v0 = t.write(_events(spark, 0, 20))
     v1 = t.write(_events(spark, 20, 30))
@@ -102,7 +103,7 @@ def test_file_uri_root_full_lifecycle_without_os_branch(
         1
         for rel in {
             f
-            for v in t._versions()
+            for v in t._log.versions()
             for f in t._read_manifest(v)["files"]
         }
     )
@@ -138,15 +139,14 @@ def test_file_uri_root_two_writer_occ(spark, tmp_path, forbid_os_manifest_io):
         th.join()
     assert not errors
     t = TxnTable(spark, root)
-    assert t._versions() == list(range(7))  # dense under the race
+    assert t._log.versions() == list(range(7))  # dense under the race
     assert t.read().count() == 5 + 6 * 5
 
 
 def test_scheme_less_root_on_remote_default_fs_rejected(spark, tmp_path, monkeypatch):
-    from etl_hiscox_spark.operators import dedup
-    from etl_hiscox_spark.sources import txnlog
+    from etl_hiscox_spark.sources import commitio, txnlog
 
-    monkeypatch.setattr(dedup, "_meta_is_local", lambda s, p: False)
+    monkeypatch.setattr(commitio, "_meta_is_local", lambda s, p: False)
     with pytest.raises(ValueError, match="fully-qualified URI"):
         txnlog.TxnTable(spark, str(tmp_path / "tbl"))
 
@@ -164,7 +164,7 @@ def test_checkpoint_caps_head_resolution_to_tail(spark, tmp_path):
     files = t._read_manifest(0)["files"]
     for v in range(1, 501):  # synthetic commits: the LOG layer under test
         t._commit(v, {"version": v, "mode": "append", "files": files, "schema": schema})
-    assert t._read_checkpoint() == 500
+    assert t._log.read_hint() == 500
     assert t.latest_version() == 500
     assert t.last_head_resolution["mode"] == "checkpoint"
     # head == checkpoint -> exactly one probe (v501 missing); bounded by
@@ -190,9 +190,9 @@ def test_expire_advances_checkpoint_past_deleted_range(spark, tmp_path):
     files = t._read_manifest(0)["files"]
     for v in range(1, 13):
         t._commit(v, {"version": v, "mode": "append", "files": files, "schema": schema})
-    assert t._read_checkpoint() == 10
+    assert t._log.read_hint() == 10
     assert t.expire_versions(keep_last=1) == 12  # v0..v11 gone
-    assert t._read_checkpoint() == 12
+    assert t._log.read_hint() == 12
     assert t.latest_version() == 12
     assert t.last_head_resolution["mode"] == "checkpoint"
     with pytest.raises(FileNotFoundError):
@@ -202,9 +202,9 @@ def test_expire_advances_checkpoint_past_deleted_range(spark, tmp_path):
     t2 = TxnTable(spark, str(tmp_path / "tbl2"), checkpoint_interval=1000)
     t2.write(_events(spark, 0, 5))
     t2.write(_events(spark, 5, 8))
-    assert t2._read_checkpoint() is None
+    assert t2._log.read_hint() is None
     t2.expire_versions(keep_last=1)
-    assert t2._read_checkpoint() == 1
+    assert t2._log.read_hint() == 1
     assert t2.latest_version() == 1
 
 
@@ -230,7 +230,7 @@ def test_fs_replace_handles_rename_refusing_store(spark, tmp_path):
     and GDPR erase crashed at its first manifest repoint."""
     from pyarrow import fs as pafs
 
-    from etl_hiscox_spark.sources.txnlog import TxnTable
+    from etl_hiscox_spark.sources import commitio
 
     class RefusingFs:  # HDFS rename semantics over the local fs
         def __init__(self):
@@ -250,11 +250,10 @@ def test_fs_replace_handles_rename_refusing_store(spark, tmp_path):
                 raise OSError(f"rename destination exists: {dst}")
             self._fs.move(src, dst)
 
-    t = TxnTable(spark, "file://" + str(tmp_path / "tbl"))
     fake = RefusingFs()
     final = str(tmp_path / "f.json")
-    t._fs_replace(fake, str(tmp_path / ".f.1.tmp"), final, b"one")
-    t._fs_replace(fake, str(tmp_path / ".f.2.tmp"), final, b"two")  # replace
+    commitio.replace_put(fake, final, b"one")
+    commitio.replace_put(fake, final, b"two")  # replace
     assert open(final, "rb").read() == b"two"
     assert sorted(os.listdir(tmp_path)) == ["f.json"]  # no tmp debris
 
@@ -272,12 +271,12 @@ def test_expire_refuses_when_checkpoint_cannot_advance(spark, tmp_path, monkeypa
     files = t._read_manifest(0)["files"]
     for v in range(1, 13):
         t._commit(v, {"version": v, "mode": "append", "files": files, "schema": schema})
-    assert t._read_checkpoint() == 10
+    assert t._log.read_hint() == 10
 
     # advance fails -> hint dropped -> expiry proceeds, head via LIST
-    monkeypatch.setattr(t, "_write_checkpoint", lambda v: None)
+    monkeypatch.setattr(t._log, "write_hint", lambda v: None)
     assert t.expire_versions(keep_last=1) == 12
-    assert t._read_checkpoint() is None
+    assert t._log.read_hint() is None
     assert t.latest_version() == 12
     assert t.last_head_resolution["mode"] == "list"
 
@@ -286,12 +285,12 @@ def test_expire_refuses_when_checkpoint_cannot_advance(spark, tmp_path, monkeypa
     t2.write(_events(spark, 0, 5))
     for v in range(1, 7):
         t2._commit(v, {"version": v, "mode": "append", "files": files, "schema": schema})
-    assert t2._read_checkpoint() == 5
-    monkeypatch.setattr(t2, "_write_checkpoint", lambda v: None)
-    monkeypatch.setattr(t2, "_drop_checkpoint", lambda: None)
+    assert t2._log.read_hint() == 5
+    monkeypatch.setattr(t2._log, "write_hint", lambda v: None)
+    monkeypatch.setattr(t2._log, "drop_hint", lambda: None)
     with pytest.raises(RuntimeError, match="refusing to delete"):
         t2.expire_versions(keep_last=1)
-    assert t2._versions() == list(range(7))  # nothing expired
+    assert t2._log.versions() == list(range(7))  # nothing expired
 
 
 def test_append_schema_precheck_rejects_before_staging(spark, tmp_path):
@@ -411,7 +410,7 @@ def test_vacuum_skips_manifest_proven_expired_by_watermark(
     )
     removed = t.vacuum(min_age_seconds=0.0)
     assert removed >= 1  # v0/v1-only files reclaimed, no refusal
-    assert t._read_expire_watermark() == 1
+    assert t._log.read_floor() == 1
     assert t.read().count() == 10  # head intact
 
 
@@ -471,7 +470,7 @@ def test_readers_skip_watermark_covered_versions(spark, tmp_path, monkeypatch):
     t.write(_events(spark, 10, 20), mode="append")
     t.write(_events(spark, 20, 30), mode="append")
     ts1 = t._read_manifest(1)["committed_at"]
-    t._mark_expire_watermark(1)
+    t._log.mark_floor(1)
     man = os.path.join(root, "_txn_log", "v1.json")
     _hostile_manifest_read(monkeypatch, 1, lambda: os.remove(man))
     assert t.version_as_of(ts1 + 0.0001) == 0  # v1 expired -> newest survivor
@@ -488,22 +487,23 @@ def test_expire_watermark_ordering_atomic_store(spark, tmp_path, monkeypatch):
     (ManifestRetired) without the watermark, and a later expire whose
     watermark covers the version coalesces the pair."""
     from etl_hiscox_spark.sources.txnlog import TxnTable
+    from etl_hiscox_spark.sources.versionlog import VersionLog
 
     root = str(tmp_path / "wm_mark")
     t = TxnTable(spark, root)
     for lo in (0, 10, 20):
         t.write(_events(spark, lo, lo + 10), mode="append")
-    assert t._read_expire_watermark() == -1 and not t._expired_ever()
+    assert t._log.read_floor() == -1 and not t._log.trimmed_ever()
     assert t.expire_versions(keep_last=2) == 1
-    assert t._read_expire_watermark() == 0 and t._expired_ever()
+    assert t._log.read_floor() == 0 and t._log.trimmed_ever()
     # markers are create-if-absent: a stale smaller mark never regresses
-    t._mark_expire_watermark(0)
-    assert t._read_expire_watermark() == 0
+    t._log.mark_floor(0)
+    assert t._log.read_floor() == 0
 
     t2 = TxnTable(spark, root)
     monkeypatch.setattr(
-        TxnTable,
-        "_mark_expire_watermark",
+        VersionLog,
+        "mark_floor",
         lambda self, v: (_ for _ in ()).throw(OSError("marker store down")),
     )
     with pytest.raises(RuntimeError, match="tombstoned names keep refusing"):
@@ -511,10 +511,10 @@ def test_expire_watermark_ordering_atomic_store(spark, tmp_path, monkeypatch):
     monkeypatch.undo()
     # the victim WAS tombstoned (tombstone-first): excluded from the live
     # listing, content is a tombstone, name refuses a commit naturally
-    assert t2._versions() == [2]
+    assert t2._log.versions() == [2]
     with pytest.raises(FileNotFoundError, match="expired by retention"):
         t2._read_manifest(1)
-    assert t2._read_expire_watermark() == 0  # marker never landed
+    assert t2._log.read_floor() == 0  # marker never landed
     # history and head are consistent in the tombstoned-but-unmarked state
     assert [m["version"] for m in t2.history()] == [2]
     assert t2.latest_version() == 2
@@ -522,7 +522,7 @@ def test_expire_watermark_ordering_atomic_store(spark, tmp_path, monkeypatch):
     # and the NEXT one coalesces the orphaned pair
     t2.write(_events(spark, 30, 40), mode="append")
     assert t2.expire_versions(keep_last=1) == 1  # victims v2 -> watermark 2
-    assert t2._read_expire_watermark() == 2
+    assert t2._log.read_floor() == 2
     t2.write(_events(spark, 40, 50), mode="append")
     assert t2.expire_versions(keep_last=1) == 1  # floor_before=2 covers v1
     log_names = set(os.listdir(os.path.join(root, "_txn_log")))
@@ -538,26 +538,26 @@ def test_expire_marks_watermark_first_on_rename_refusing_store(
     the pre-link watermark refusal is what keeps stragglers out of
     replace_put's absence window there, so if the marker cannot land,
     expire refuses and retires NOTHING."""
-    from etl_hiscox_spark.sources import txnlog
     from etl_hiscox_spark.sources.txnlog import TxnTable
+    from etl_hiscox_spark.sources.versionlog import VersionLog
 
     root = str(tmp_path / "wm_mark_hdfs")
     t = TxnTable(spark, root)
     for lo in (0, 10, 20):
         t.write(_events(spark, lo, lo + 10), mode="append")
-    monkeypatch.setattr(TxnTable, "_retire_is_atomic", lambda self: False)
+    monkeypatch.setattr(VersionLog, "retire_is_atomic", lambda self: False)
     monkeypatch.setattr(
-        TxnTable,
-        "_mark_expire_watermark",
+        VersionLog,
+        "mark_floor",
         lambda self, v: (_ for _ in ()).throw(OSError("marker store down")),
     )
     with pytest.raises(RuntimeError, match="refusing to retire"):
         t.expire_versions(keep_last=1)
-    assert t._versions() == [0, 1, 2]  # nothing retired under the refusal
+    assert t._log.versions() == [0, 1, 2]  # nothing retired under the refusal
     assert t._read_manifest(0)["version"] == 0  # content untouched
     monkeypatch.undo()
     assert t.expire_versions(keep_last=1) == 2  # re-run completes
-    assert t._read_expire_watermark() == 1
+    assert t._log.read_floor() == 1
 
 
 def test_commit_refuses_to_reuse_an_expired_version_number(spark, tmp_path):
@@ -587,7 +587,7 @@ def test_commit_refuses_to_reuse_an_expired_version_number(spark, tmp_path):
     with open(os.path.join(root, "_txn_log", "v1.json")) as f:
         assert _json.load(f).get("tombstone") is True
     assert os.path.exists(os.path.join(root, "_txn_log", "v1.retired"))
-    assert t._versions() == [2, 3]  # log exactly as before the attempt
+    assert t._log.versions() == [2, 3]  # log exactly as before the attempt
     with pytest.raises(FileNotFoundError, match="expired"):
         t.read(1)  # time travel to the retired version stays LOUD
     # and the public OCC write path still lands fresh commits normally
@@ -637,7 +637,7 @@ def test_fresh_commit_swept_by_concurrent_retention_is_not_a_conflict(
             other.write(_events(spark, 50, 55), mode="append")   # v5
             other.write(_events(spark, 60, 65), mode="append")   # v6
             assert other.expire_versions(keep_last=2) == 5       # sweeps v4
-            assert other._read_expire_watermark() == 4
+            assert other._log.read_floor() == 4
 
     monkeypatch.setattr(commitio, "commit_if_absent", commit_then_sweep)
     # the r15 classifier would raise FileExistsError here and the OCC
@@ -663,8 +663,8 @@ def test_stale_reuse_that_slips_the_prelink_guard_is_unwound(
     bytes, unwinds, and raises the standard conflict."""
     import time as _time
 
-    from etl_hiscox_spark.sources import txnlog
     from etl_hiscox_spark.sources.txnlog import TxnTable
+    from etl_hiscox_spark.sources.versionlog import VersionLog
 
     root = str(tmp_path / "slip")
     t = TxnTable(spark, root)
@@ -677,7 +677,7 @@ def test_stale_reuse_that_slips_the_prelink_guard_is_unwound(
     assert t.expire_versions(keep_last=2) == 1
     assert "v1.json" not in os.listdir(os.path.join(root, "_txn_log"))
 
-    real_wm = txnlog.TxnTable._read_expire_watermark
+    real_wm = VersionLog.read_floor
     calls = {"n": 0}
 
     def flaky_wm(self):
@@ -686,14 +686,14 @@ def test_stale_reuse_that_slips_the_prelink_guard_is_unwound(
             raise OSError("watermark store hiccup")
         return real_wm(self)
 
-    monkeypatch.setattr(txnlog.TxnTable, "_read_expire_watermark", flaky_wm)
+    monkeypatch.setattr(VersionLog, "read_floor", flaky_wm)
     stale = {"version": 1, "mode": "append", "files": ["data/zz/p.parquet"],
              "schema": "{}", "committed_at": _time.time(), "n_added": 1}
     with pytest.raises(FileExistsError, match="already retired"):
         t._commit(1, stale)
     monkeypatch.undo()
     assert "v1.json" not in os.listdir(os.path.join(root, "_txn_log"))
-    assert t._versions() == [4, 5]
+    assert t._log.versions() == [4, 5]
 
 
 def test_fresh_commit_inside_retire_to_marker_gap_is_success(
@@ -708,6 +708,7 @@ def test_fresh_commit_inside_retire_to_marker_gap_is_success(
     content — success either way, rows exactly once."""
     from etl_hiscox_spark.sources import commitio
     from etl_hiscox_spark.sources.txnlog import TxnTable
+    from etl_hiscox_spark.sources.versionlog import VersionLog
 
     root = str(tmp_path / "gapsweep")
     t = TxnTable(spark, root)
@@ -725,15 +726,15 @@ def test_fresh_commit_inside_retire_to_marker_gap_is_success(
             other.write(_events(spark, 50, 55), mode="append")   # v5
             other.write(_events(spark, 60, 65), mode="append")   # v6
             monkeypatch.setattr(
-                TxnTable, "_mark_expire_watermark",
+                VersionLog, "mark_floor",
                 lambda self, v: (_ for _ in ()).throw(OSError("marker down")),
             )
             with pytest.raises(RuntimeError, match="tombstoned names"):
                 other.expire_versions(keep_last=2)  # sweeps v4, marker dies
-            monkeypatch.setattr(TxnTable, "_mark_expire_watermark", real_mark)
-            assert not other._expired_ever()  # crash state: no marker
+            monkeypatch.setattr(VersionLog, "mark_floor", real_mark)
+            assert not other._log.trimmed_ever()  # crash state: no marker
 
-    real_mark = TxnTable._mark_expire_watermark
+    real_mark = VersionLog.mark_floor
     monkeypatch.setattr(commitio, "commit_if_absent", commit_then_crashing_sweep)
     assert t.write(_events(spark, 40, 45), mode="append") == 4
     monkeypatch.undo()
@@ -743,7 +744,7 @@ def test_fresh_commit_inside_retire_to_marker_gap_is_success(
     assert head.count() == 40 + 5 + 5 + 5
     assert head.filter("event_id >= 40 AND event_id < 45").count() == 5
     assert t.latest_version() == 6
-    assert t._versions() == [5, 6]
+    assert t._log.versions() == [5, 6]
     # readers classify the unmarked tombstones by content: history and
     # time travel stay clean without the watermark
     assert [m["version"] for m in t.history()] == [5, 6]
@@ -757,6 +758,7 @@ def test_expire_finishes_half_retired_manifests(spark, tmp_path, monkeypatch):
     _versions yet still serving the retired manifest on a direct read,
     skipped by coalescing forever. The repair pass in expire_versions
     re-runs the replace, age-gated by the manifest's committed_at."""
+    from etl_hiscox_spark.sources import commitio
     from etl_hiscox_spark.sources.txnlog import TxnTable
 
     root = str(tmp_path / "halfman")
@@ -764,15 +766,15 @@ def test_expire_finishes_half_retired_manifests(spark, tmp_path, monkeypatch):
     for lo in (0, 10, 20, 30):
         t.write(_events(spark, lo, lo + 10), mode="append")
 
-    # inject: v0's content replace (os.replace on a local root) fails
-    real_replace = os.replace
+    # inject: v0's content replace fails
+    real_replace = commitio.replace_put
 
-    def flaky_replace(src, dst, *a, **kw):
-        if str(dst).endswith("v0.json"):
+    def flaky_replace(fs, path, data):
+        if path.endswith("v0.json"):
             raise OSError("content replace lost")
-        return real_replace(src, dst, *a, **kw)
+        return real_replace(fs, path, data)
 
-    monkeypatch.setattr(os, "replace", flaky_replace)
+    monkeypatch.setattr(commitio, "replace_put", flaky_replace)
     assert t.expire_versions(keep_last=2) == 2  # v0 half-retired, v1 full
     monkeypatch.undo()
 
@@ -780,7 +782,7 @@ def test_expire_finishes_half_retired_manifests(spark, tmp_path, monkeypatch):
     with open(os.path.join(log_dir, "v0.json")) as f:
         assert not json.load(f).get("tombstone")  # live content remains
     assert os.path.exists(os.path.join(log_dir, "v0.retired"))
-    assert t._versions() == [2, 3]
+    assert t._log.versions() == [2, 3]
     assert t._read_manifest(0)["version"] == 0  # still serves the manifest
 
     # age-gated: the default 600s gate leaves the young record alone
